@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,17 +27,7 @@ object ChunkedParity {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf, "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val ev = Tables.events(spark, sfDir)
@@ -115,7 +105,7 @@ object ChunkedParity {
         s""""$name":{"rows":$n,"extra":$extra,"missing":$missing}"""
       }
     println(results.mkString(
-      s"""{"metric":"chunked_parity","sf":"$sfDir","master":"$master","pairs":{""",
+      s"""{"metric":"chunked_parity","sf":"$sfDir","master":"${Harness.master}","pairs":{""",
       ",", "}}"))
     spark.stop()
     System.exit(if (bad > 0) 1 else 0)

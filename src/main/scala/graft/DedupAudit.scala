@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,19 +27,7 @@ object DedupAudit {
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val tau = if (args.length > 1) args(1).toDouble else 0.8
     val threshold = if (args.length > 2) args(2).toDouble else 0.9
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // see Verify: shuffle width tracks DATA size at big derived SFs
-    // (sf10dup banding pairs spill at core-count width)
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf, "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def timed[A](body: => A): (A, Double) = {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Zipf-hot-key stress harness (VERDICT r8 #5): run the skew-sensitive
   * registry queries over a `make_sf.py --skew` fixture — one user owning
@@ -47,17 +46,7 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultSpot
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf, "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val durations = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()

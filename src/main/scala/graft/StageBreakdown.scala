@@ -3,7 +3,6 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-STAGE task-time attribution for one registry query — the
   * drill-down SkewBench can't give (it pools all stages). Prints one
@@ -17,14 +16,7 @@ object StageBreakdown {
   def main(args: Array[String]): Unit = {
     val (sfDir, name) = (args(0), args(1))
     val skewOn = args.length <= 2 || args(2).toBoolean
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf, "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Harness.builder()
       // SPARK_GRAFT_AUTOBROADCAST=-1 probes the non-broadcast regime
       // (node-sized tables at 100 TB cannot broadcast) so loop-join
       // stage shapes reflect the at-scale plan, not the fixture's BHJ
@@ -32,7 +24,6 @@ object StageBreakdown {
         sys.env.getOrElse("SPARK_GRAFT_AUTOBROADCAST", "10485760b"))
       .config("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
       .config("spark.sql.adaptive.forceOptimizeSkewedJoin", skewOn.toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

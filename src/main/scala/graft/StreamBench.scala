@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.{DocDedup, EmbDedup}
@@ -42,19 +41,7 @@ object StreamBench {
     val batchSize = if (args.length > 1) args(1).toInt else 5000
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     val op = if (args.length > 3) args(3) else "doc"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // Shuffle width = state-store SHARD count for a streaming stateful
-    // op (fixed at first checkpoint). Decoupled from cores (VERDICT r11
-    // #7) so the state-sharding scaling leg can vary one without the
-    // other; SPARK_GRAFT_MASTER mirrors Verify's multi-JVM override.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf, "true")
+    val spark = Harness.builder()
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // Deployment posture for streaming state (r8 profile: full-snapshot
@@ -73,7 +60,6 @@ object StreamBench {
       // a rep can linger past expiry until the next batch touches the
       // store, never vanish early.
       .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -147,7 +133,7 @@ object StreamBench {
       case "embprobe" => "EmbDedup.probesTtl"
       case _ => "incrementalCandidatesTtl"
     }
-    println(f"""{"metric":"stream_rows_per_sec","value":$rps%.1f,"unit":"rows/sec","steady_rows_per_sec":$steady%.1f,"op":"$opName","store":"rocksdb","changelog_checkpointing":true,"no_data_batches":false,"rows":$rows,"batch_size":$batchSize,"batches":${(rows + batchSize - 1) / batchSize},"secs":$secs%.3f,"batch_secs":$perBatch,"shuffle_partitions":$shufflePartitions,"master":"$master","sf":"$sfDir"}""")
+    println(f"""{"metric":"stream_rows_per_sec","value":$rps%.1f,"unit":"rows/sec","steady_rows_per_sec":$steady%.1f,"op":"$opName","store":"rocksdb","changelog_checkpointing":true,"no_data_batches":false,"rows":$rows,"batch_size":$batchSize,"batches":${(rows + batchSize - 1) / batchSize},"secs":$secs%.3f,"batch_secs":$perBatch,"shuffle_partitions":${Harness.shufflePartitions},"master":"${Harness.master}","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -27,9 +27,9 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   /** The conf that lets Spark read parquet TIMESTAMP(NANOS) as raw longs.
     * Session-global by nature (checked at both schema inference and scan
-    * execution), so it must be set at session construction — every graft
-    * entry point (Bench, Verify, PlanDump, ShuffleAudit, TestSession)
-    * does. A table loader mutating the shared session as a side effect
+    * execution), so it must be set at session construction — as
+    * [[Harness.builder]] (every graft main's session) and TestSession
+    * do. A table loader mutating the shared session as a side effect
     * would silently change how unrelated nanos parquet reads behave. */
   val nanosAsLongConf = "spark.sql.legacy.parquet.nanosAsLong"
 

@@ -11,28 +11,9 @@ object Verify {
     if (unknown.nonEmpty)
       System.err.println(
         s"[verify] WARNING: unknown query name(s), skipping: ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the master — e.g. local-cluster[2,8,2048]
-    // to exercise real serialization + network shuffle (multi-JVM) without
-    // a cluster; executors then need the graft classes via
-    // -Dspark.executor.extraClassPath=target/scala-2.13/classes
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS decouples shuffle width from core
-    // count: partitions should track DATA size, not cores — at derived
-    // sf10 a 24-wide shuffle makes 2.5M-row partitions that spill;
-    // 128-wide keeps per-task state in memory (AQE coalesces the small
-    // ones back). Default stays = cpus, the sf0.001–sf0.1 contract.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     // only stop what we start — embedding callers (tests) keep theirs
     val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_QUERY_TIMEOUT_SEC > 0 arms a per-query watchdog: the

@@ -1165,8 +1165,8 @@ object TextPipeline {
     * `train` is a (doc_id, sh) shingle relation, `bench` a (sh) one
     * (neither need be distinct). The bench set rides a forced broadcast
     * — the right plan while the eval suite fits a hash table; see
-    * [[decontamBloom]] for the regime where it doesn't
-    * (graft.BloomCrossoverBench measures the crossover). */
+    * [[decontamBloom]] for the regime where it doesn't (crossover
+    * measured in BLOOMX_r07.json and BLOOMX_r07_localcluster.json). */
   def decontamBroadcast(train: DataFrame, bench: DataFrame): DataFrame = {
     val b = bench.select("sh").distinct().withColumn("hit", lit(1L))
     contamOut(train.select("doc_id", "sh").distinct()

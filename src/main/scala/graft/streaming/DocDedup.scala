@@ -74,8 +74,9 @@ object DocDedup {
     * the batch pipeline exactly. (The previous HOF formulation — 16
     * separate `array_min(transform(words, ...))` columns — duplicated
     * the tokenize+distinct subtree into every hash: 16 tokenizations per
-    * row, measured as 70% of streaming ingest wall time. StreamProfile
-    * r8 decomposes the cost; StreamingSpec pins kernel≡HOF≡batch
+    * row, measured as 70% of streaming ingest wall time; the round-8
+    * stage-isolating profile is in BASELINE_HISTORY.md, "STREAMING
+    * INGEST-DEDUP THROUGHPUT". StreamingSpec pins kernel≡HOF≡batch
     * signatures.) Tokenless docs produce no rows, as on the batch path.
     * Works on both static and streaming input. */
   def bandedRows(docsIn: DataFrame, carry: Seq[String] = Nil): DataFrame = {
@@ -170,8 +171,9 @@ object DocDedup {
     * which is how a perpetual ingest feed keeps its index from growing
     * without bound.
     *
-    * Timer cost, engineered (StreamProfile r8 measured naive re-arming
-    * at ~35% of ingest wall time): the armed target lives IN the value
+    * Timer cost, engineered (the round-8 stage-isolating profile in
+    * BASELINE_HISTORY.md measured naive re-arming at ~35% of ingest
+    * wall time): the armed target lives IN the value
     * state (no listTimers() store scan per arrival), and targets are
     * quantized UP to a `ttl/64` grid — the timer only moves when
     * activity crosses a grid line, so a hot bucket pays one
@@ -484,8 +486,9 @@ object DocDedup {
     // write (above) — the sorted two-pointer verify reads them as-is.
     // A read-side re-sort was measured and REJECTED: it re-sorts every
     // standing doc's set per epoch while the verify only touches
-    // candidates (EpochBench sf1dup 3-epoch total 21.8 s with the
-    // re-sort vs 19.9 s baseline). State dirs written before r13 must
+    // candidates (sf1dup 3-epoch total 21.8 s with the re-sort vs
+    // 19.9 s baseline, BENCH_r13_stream_epoch.json; `perfbench`'s
+    // docdedup-epochs workload times this path). State dirs written before r13 must
     // be rebuilt (all tests/benches create state fresh per run).
     val words = spark.read.parquet(s"$stateDir/words")
       .select("doc_id", "words")

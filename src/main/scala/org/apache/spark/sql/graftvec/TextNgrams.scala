@@ -153,7 +153,7 @@ object NgramKernel {
     * (`array_min(transform(words, ...))` × 16), whose Column-level
     * construction duplicated the tokenize+distinct subtree into every
     * hash — 16 full tokenizations per row, measured as 70% of streaming
-    * ingest wall time (StreamProfile, round 8). Empty word set → empty
+    * ingest wall time (round-8 streaming profile, BASELINE_HISTORY.md). Empty word set → empty
     * array (callers filter, mirroring the batch no-token rule). Called
     * from generated code. */
   def minhashSig(text: UTF8String, n: Int): ArrayData = {

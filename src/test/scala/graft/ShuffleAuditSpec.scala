@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Shuffle budget regression guard: at 100 TB the shuffle count is the
@@ -9,14 +12,20 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   */
 class ShuffleAuditSpec extends SparkSpec {
 
-  private def shuffles(name: String): Int = {
+  /** The static (AQE off) physical plan; the frame is built with AQE off
+    * too, since some builders plan eagerly. */
+  private def staticPlan(df: => DataFrame): SparkPlan = {
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try SparkEntry.queries(name)(spark, sf0001)
-      .queryExecution.executedPlan
-      .collect { case e: ShuffleExchangeExec => e }.size
+    try df.queryExecution.executedPlan
     finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
+
+  private def shuffleCount(plan: SparkPlan): Int =
+    plan.collect { case e: ShuffleExchangeExec => e }.size
+
+  private def shuffles(name: String): Int =
+    shuffleCount(staticPlan(SparkEntry.queries(name)(spark, sf0001)))
 
   // exact pins: agg+sort pipelines shuffle once per re-key, never more
   private val pinned = Map(
@@ -392,16 +401,8 @@ class ShuffleAuditSpec extends SparkSpec {
   // pinned on the library functions directly (r10-measured values):
   // each chunked form keeps exactly ONE event-sized exchange, the
   // (user, day) keyed one; everything else moves user-DAY rows.
-  private def shufflesOf(df: org.apache.spark.sql.DataFrame): Int = {
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan
-      .collect { case e: ShuffleExchangeExec => e }.size
-    finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-  }
   private lazy val chunkedDelta = 3L * 24 * 3600 * 1000000
-  private lazy val chunkedPinned: Seq[(String, Int,
-      org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] =
+  private lazy val chunkedPinned: Seq[(String, Int, DataFrame => DataFrame)] =
     Seq(
       ("sessionizeChunked", 6, graft.operators.Advanced.sessionizeChunked),
       ("funnelDepthChunked", 3, graft.operators.Advanced.funnelDepthChunked),
@@ -417,16 +418,55 @@ class ShuffleAuditSpec extends SparkSpec {
 
   chunkedPinned.foreach { case (name, budget, fn) =>
     test(s"$name (skew path) stays within its $budget-shuffle budget") {
-      val got = shufflesOf(fn(Tables.events(spark, sf0001)))
+      val got = shuffleCount(staticPlan(fn(Tables.events(spark, sf0001))))
       assert(got <= budget, s"$name now shuffles $got times (budget $budget)")
     }
   }
 
+  /** A global `orderBy` plans a range exchange whose boundary-sampling
+    * job executes the child plan once before the exchange executes it
+    * again. With a shuffle or a checkpoint (RDD) scan below, the sampler
+    * reads materialized output; with neither, the whole scan-local
+    * pipeline (regexes, kernels, codec decodes) runs twice per query
+    * (OPTIMIZATION_r13.md §10). The cure is to hash-repartition on the
+    * sort key first, judged case by case. */
+  private def exposedRangeSort(plan: SparkPlan): Boolean = plan.exists {
+    case e: ShuffleExchangeExec =>
+      e.outputPartitioning.isInstanceOf[RangePartitioning] &&
+        !e.child.exists {
+          case _: ShuffleExchangeExec | _: RDDScanExec => true
+          case _ => false
+        }
+    case _ => false
+  }
+
+  /** One static-plan walk over the whole registry, shared by the two
+    * suite-wide tests: name -> (shuffle count, exposed range sort). */
+  private lazy val registryAudit: Map[String, (Int, Boolean)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val plan = staticPlan(fn(spark, sf0001))
+      name -> (shuffleCount(plan), exposedRangeSort(plan))
+    }.toMap
+
   test("no registered query exceeds 6 shuffles (suite-wide ceiling)") {
-    val over = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val n = shuffles(name)
-      if (n > 6) Some(s"$name=$n") else None
+    val over = registryAudit.toSeq.sortBy(_._1).collect {
+      case (name, (n, _)) if n > 6 => s"$name=$n"
     }
     assert(over.isEmpty, s"over budget: ${over.mkString(", ")}")
+  }
+
+  test("only the examined queries keep a range sort over an exchange-free child") {
+    // OPTIMIZATION_r13.md §10 kept these on purpose: q35 and q82 were
+    // re-keyed, measured worse or flat, and reverted; q03/q67/q89 sort a
+    // trivial projection of the scan; q18/q65/q90 sort a join that only
+    // broadcasts at fixture scale and shuffles (so the sampler reuses
+    // it) at 100 TB.
+    val kept = Set("q03_grep", "q18_semi_anti", "q35_embedding_neardup",
+      "q65_incremental_dedup", "q67_scalar_sweep", "q82_url_extract",
+      "q89_zorder", "q90_merge_upsert")
+    val exposed = registryAudit.collect { case (name, (_, true)) => name }.toSet
+    assert(exposed == kept,
+      s"newly exposed: ${(exposed -- kept).toSeq.sorted.mkString(", ")}; " +
+        s"no longer exposed: ${(kept -- exposed).toSeq.sorted.mkString(", ")}")
   }
 }

@@ -48,13 +48,12 @@ JAVA=(java "${ADD_OPENS[@]}" -Dspark.ui.enabled=false
 
 OUT="$(mktemp -d /tmp/sf1_spot.XXXXXX)"
 echo "[sf1_spot] verify spot set at $SF1 -> $OUT"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  "${JAVA[@]}" graft.Verify "$SF1" "$OUT" "${SPOT[@]}" >/dev/null
+"${JAVA[@]}" graft.Verify "$SF1" "$OUT" "${SPOT[@]}" >/dev/null
 python3 tools/oracle_check.py "$SF1" "$OUT" "${SPOT[@]}" \
   | tee "CORRECTNESS_r${ROUND}_sf1_local.txt"
 
 echo "[sf1_spot] bench spot set"
-SPARK_GRAFT_SF_DIR="$SF1" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+SPARK_GRAFT_SF_DIR="$SF1" \
   SPARK_GRAFT_BENCH_PASSES="${SPARK_GRAFT_BENCH_PASSES:-3}" \
   "${JAVA[@]}" graft.Bench "${SPOT[@]}" \
   | grep -a '"stat":"min-of' | tail -1 > "BENCH_r${ROUND}_sf1_local.json"
@@ -76,13 +75,11 @@ fi
 DUPSPOT=(q24_exact_dedup q71_dedup_corpus)
 OUT2="$(mktemp -d /tmp/sf1dup_spot.XXXXXX)"
 echo "[sf1_spot] verify dedup spot set at $SF1DUP -> $OUT2"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  "${JAVA[@]}" graft.Verify "$SF1DUP" "$OUT2" "${DUPSPOT[@]}" >/dev/null
+"${JAVA[@]}" graft.Verify "$SF1DUP" "$OUT2" "${DUPSPOT[@]}" >/dev/null
 python3 tools/oracle_check.py "$SF1DUP" "$OUT2" "${DUPSPOT[@]}" \
   | tee "CORRECTNESS_r${ROUND}_sf1dup_local.txt"
 echo "[sf1_spot] full-corpus dedup audit at $SF1DUP"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  "${JAVA[@]}" graft.DedupAudit "$SF1DUP" \
+"${JAVA[@]}" graft.DedupAudit "$SF1DUP" \
   | tail -1 > "DEDUP_r${ROUND}_sf1dup.json"
 cat "DEDUP_r${ROUND}_sf1dup.json"
 echo "[sf1_spot] wrote CORRECTNESS_r${ROUND}_sf1_local.txt, BENCH_r${ROUND}_sf1_local.json, CORRECTNESS_r${ROUND}_sf1dup_local.txt, DEDUP_r${ROUND}_sf1dup.json"

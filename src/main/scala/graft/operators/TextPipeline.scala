@@ -555,28 +555,82 @@ object TextPipeline {
       .orderBy("a", "b")
   }
 
-  /** Connected components by min-label propagation ACCELERATED WITH
-    * POINTER JUMPING: each round every node adopts the smallest label
-    * among itself and its neighbors (the Pregel shape), then labels
-    * compose through themselves — `L'(v) = min(L(v), L(L(v)))` — so the
-    * propagation reach roughly DOUBLES per round and convergence is
-    * O(log diameter), not O(diameter). Plain propagation needs ~999
-    * rounds on a 1000-node path (and a measured 57-vector near-dup
-    * chain in the embeddings fixture already blew a 20-round cap); the
-    * jump closes both in ~10. The alternative (large-star/small-star
-    * edge contraction, Kiveris et al.) has the same round bound but
-    * rewrites the EDGE SET through two join+distinct phases per round —
-    * measured 1.4–2.5× slower across q48/q71–q75 on the fixture because
-    * near-dup pair graphs are shallow and the per-round constant
-    * dominates. Here edges are checkpointed ONCE and only the
-    * node-sized label table is rewritten; the jump join touches labels
-    * only. Driver coordinates the loop, executors do all data work;
-    * `localCheckpoint` truncates the growing lineage each round. Labels
-    * only ever decrease, so the fixpoint test stays one scalar sum per
+  /** Connected components of the undirected graph `pairs(a, b)`: one
+    * `(id: long, rep: long)` row per endpoint, `rep` the MINIMUM id of
+    * its component. Endpoints are non-null ids (every consumer's pairs
+    * come out of id joins). Two regimes, split on the directed edge
+    * count that the edges checkpoint measures as it writes (an
+    * `observe` metric folded into that one job, no extra pass):
+    *
+    *  - at most [[DriverFinishMaxEdges]] directed edges: collect the
+    *    checkpointed edges once (`src <= dst`, so each pair arrives once
+    *    and self-pairs keep their node) and run min-root union-find in
+    *    the driver ([[unionFindLabels]]); the labels come back as a
+    *    one-partition relation: one checkpoint and one collect,
+    *    whatever the graph's depth.
+    *    This is the small-residual finish of Kiveris et al. (SoCC 2014):
+    *    once the graph fits in one task, per-round scheduling latency is
+    *    all a distributed round would buy.
+    *  - above it: min-label propagation ACCELERATED WITH POINTER JUMPING,
+    *    the only regime that runs on a graph too large for the driver.
+    *    Each round every node adopts the smallest label among itself and
+    *    its neighbors (the Pregel shape), then labels compose through
+    *    themselves — `L'(v) = min(L(v), L(L(v)))` — so the propagation
+    *    reach roughly DOUBLES per round and convergence is
+    *    O(log diameter), not O(diameter). Plain propagation needs ~999
+    *    rounds on a 1000-node path (and a measured 57-vector near-dup
+    *    chain in the embeddings fixture already blew a 20-round cap); the
+    *    jump closes both in ~10. The alternative (large-star/small-star
+    *    edge contraction, Kiveris et al.) has the same round bound but
+    *    rewrites the EDGE SET through two join+distinct phases per round —
+    *    measured 1.4–2.5× slower across q48/q71–q75 on the fixture because
+    *    near-dup pair graphs are shallow and the per-round constant
+    *    dominates. Here edges are checkpointed ONCE and only the
+    *    node-sized label table is rewritten; the jump join touches labels
+    *    only. Driver coordinates the loop, executors do all data work;
+    *    `localCheckpoint` truncates the growing lineage each round.
+    *
+    * Both regimes are exact and agree row for row. Labels only ever
+    * decrease, so the loop's fixpoint test stays one scalar sum per
     * round, and at the fixpoint labels are root-consistent
     * (`L(L(v)) = L(v)`) and edge-consistent (both endpoints equal), i.e.
-    * every node carries its component's MINIMUM id. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
+    * every node carries its component's minimum id. Union-find that
+    * always hangs the larger root under the smaller one ends with each
+    * component's root at its minimum id, the same labels. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
+    connectedComponents(pairs, maxIter, DriverFinishMaxEdges)
+
+  /** Directed edge count (2 per input pair) at or below which
+    * [[connectedComponents]] finishes in the driver. Measured at
+    * local[4] (4-core VM, 4 GB heap) on random graphs of m pairs over m
+    * nodes, labels counted, warm runs; heap is the JVM's summed heap-pool
+    * peak during the call (driver and local executors share it):
+    * {{{
+    *   directed  nodes  driver finish  loop       heap peak GB       labels
+    *   edges                                      (finish / loop)    kept
+    *   1e4       4.3k   0.44-0.53 s    3.9-4.6 s  0.13 / 0.50-0.65   <1 MB
+    *   1e5       43k    0.57-0.59 s    5.9-6.4 s  0.19 / 0.78-0.96    3 MB
+    *   1e6       432k   2.4-2.5 s      35-41 s    0.49-0.64 / 2.6    29 MB
+    *   4e6       1.7M   11.7-14.1 s    (not run)  1.35 / -          117 MB
+    * }}}
+    * The finish wins at every measured size, so the bound is set by
+    * driver memory, not speed: its transient peak grows with the edge
+    * count and passes 1 GB (the order of a default driver heap) between
+    * 1e6 and 4e6 edges. 2^20 keeps it near 0.6 GB. */
+  private val DriverFinishMaxEdges: Long = 1L << 20
+
+  /** [[connectedComponents]] with the driver-finish bound as a
+    * parameter, so tests can force the loop (`driverMaxEdges = 0`). */
+  private[graft] def connectedComponents(
+      pairs: DataFrame, maxIter: Int, driverMaxEdges: Long): DataFrame = {
+    val (edges, nEdges) = componentEdges(pairs)
+    if (nEdges <= driverMaxEdges) unionFindLabels(edges)
+    else propagateLabels(edges, maxIter)
+  }
+
+  /** The symmetric directed edge set of `pairs`, checkpointed and keyed
+    * by `dst`, with its row count observed during that same job. */
+  private[graft] def componentEdges(pairs: DataFrame): (DataFrame, Long) = {
     // r13 (guide §2.4, the pageRank treatment): the loop's STATIC side is
     // partitioned by its loop-join key (dst) ONCE — in the non-broadcast
     // regime (node-sized label tables at 100 TB cannot broadcast) the
@@ -586,11 +640,63 @@ object TextPipeline {
     // localCheckpoint) so the restored partitioning metadata reaches the
     // loop's planner under AQE (CheckpointMeta) and the
     // reliable-checkpoint knob covers this loop too.
+    val obs = org.apache.spark.sql.Observation()
     val edges = Checkpoints.cut(pairs.select(col("a").cast("long").as("src"),
         col("b").cast("long").as("dst"))
       .union(pairs.select(col("b").cast("long").as("src"),
         col("a").cast("long").as("dst")))
-      .repartition(col("dst")))
+      .repartition(col("dst"))
+      .observe(obs, count(lit(1)).as("n")))
+    (edges, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** Driver finish: min-root union-find over the collected edges, on
+    * primitive arrays (sorted distinct ids, an `Int` parent array). */
+  private def unionFindLabels(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.LongType
+    // (src, dst) endpoints flattened, one primitive array per partition
+    val ends = edges.where(col("src") <= col("dst"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val b = Array.newBuilder[Long]
+        rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator.single(b.result())
+      }.collect().flatten
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices) if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var v = x
+      while (parent(v) != v) { parent(v) = parent(parent(v)); v = parent(v) }
+      v
+    }
+    var e = 0
+    while (e < ends.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, 0, n, ends(e)))
+      val rb = find(java.util.Arrays.binarySearch(ids, 0, n, ends(e + 1)))
+      // ids are sorted, so the smaller index is the smaller id
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 2
+    }
+    val labels = (ids.take(n), Array.tabulate(n)(i => ids(find(i))))
+    // an RDD scan with its true size, not a LocalRelation: like the
+    // loop's checkpoint it stays opaque to the optimizer (no joins folded
+    // away on an empty label set, no range sort re-sampling a scan-local
+    // child), and the planner can still broadcast it when small
+    org.apache.spark.sql.graftvec.PlanBridge.ofRdd(edges.sparkSession,
+      Seq(AttributeReference("id", LongType)(), AttributeReference("rep", LongType)()),
+      edges.sparkSession.sparkContext.parallelize(Seq(labels), 1).flatMap {
+        case (id, rep) => id.indices.iterator.map(i => InternalRow(id(i), rep(i)))
+      },
+      n)
+  }
+
+  /** Loop regime of [[connectedComponents]]: pointer-jumping label
+    * propagation over the checkpointed `edges` until no label moves. */
+  private def propagateLabels(edges: DataFrame, maxIter: Int): DataFrame = {
     // r13 (VERDICT r12 #6): the convergence sum rides the checkpoint
     // materialization as an observe() metric — CollectMetrics folds
     // Σrep into the same job that writes the checkpoint blocks, so the

@@ -279,15 +279,23 @@ class PropertySpec extends SparkSpec {
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
       nodes.map(id => id -> find(id.toInt).toLong).toMap
     }
-    // (nodes, edges): sparse forest-ish, denser than nodes, tiny dense
-    for ((n, m) <- Seq((400, 150), (300, 600), (40, 300))) {
-      val edges = Seq.fill(m)((nextInt(n).toLong, nextInt(n).toLong))
-        .filter(e => e._1 != e._2)
-      val want = unionFind(n, edges)
-      val got = TextPipeline.connectedComponents(edges.toDF("a", "b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == want, s"n=$n m=$m: " +
-        s"diff=${(got.toSet -- want.toSet).take(5)} / ${(want.toSet -- got.toSet).take(5)}")
+    // (nodes, edges): sparse forest-ish, denser than nodes, tiny dense;
+    // random draws keep their self-pairs (a == b)
+    val random = for ((n, m) <- Seq((400, 150), (300, 600), (40, 300)))
+      yield s"n=$n m=$m" -> Seq.fill(m)((nextInt(n).toLong, nextInt(n).toLong))
+    // the empty graph, and a self-pair whose node has no other edge
+    val degenerate = Seq("empty" -> Seq.empty[(Long, Long)],
+      "lone self-pair" -> Seq((5L, 5L), (1L, 2L), (2L, 2L)))
+    for ((name, edges) <- random ++ degenerate) {
+      val want = unionFind(edges.map(e => e._1.max(e._2).toInt + 1).maxOption.getOrElse(0), edges)
+      val pairs = edges.toDF("a", "b")
+      // default bound: the driver finish; bound 0: the distributed loop
+      for ((regime, labels) <- Seq("driver" -> TextPipeline.connectedComponents(pairs),
+          "loop" -> TextPipeline.connectedComponents(pairs, 50, 0L))) {
+        val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == want, s"$name $regime: " +
+          s"diff=${(got.toSet -- want.toSet).take(5)} / ${(want.toSet -- got.toSet).take(5)}")
+      }
     }
   }
 

@@ -37,6 +37,13 @@ class TextPipelineSpec extends SparkSpec {
     }
   }
 
+  /** Both components regimes on `pairs`: the driver finish (default
+    * bound) and the distributed loop (bound 0 forces it). */
+  private def bothRegimes(pairs: org.apache.spark.sql.DataFrame)
+      : Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+    "driver" -> TextPipeline.connectedComponents(pairs),
+    "loop" -> TextPipeline.connectedComponents(pairs, 50, 0L))
+
   test("connectedComponents: chain, triangle, and isolated pair") {
     import spark.implicits._
     // components: {1,2,3,4} (chain), {10,11,12} (triangle), {20,21}
@@ -44,22 +51,79 @@ class TextPipelineSpec extends SparkSpec {
       (1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L), (11L, 12L), (10L, 12L),
       (20L, 21L)).toDF("a", "b")
-    val got = graft.operators.TextPipeline.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
+    for ((regime, labels) <- bothRegimes(pairs)) {
+      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L), regime)
+    }
   }
 
   test("connectedComponents: a 1000-node path converges in O(log n) rounds") {
     import spark.implicits._
     // Worst case for label propagation (needs ~diameter = 999 rounds);
-    // star contraction must close it well inside the default cap of 50.
+    // the loop's pointer jump must close it well inside the default cap
+    // of 50, and the driver finish must agree with it.
     // Ids are shuffled so the min does not ride the path monotonically.
     val perm = (0 until 1000).map(i => (i * 541L) % 1000L) // 541 coprime to 1000
     val pairs = (0 until 999).map(i => (perm(i), perm(i + 1))).toDF("a", "b")
-    val got = TextPipeline.connectedComponents(pairs)
-    assert(got.count() == 1000L)
-    assert(got.select("rep").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
+    for ((regime, got) <- bothRegimes(pairs)) {
+      assert(got.count() == 1000L, regime)
+      assert(got.select("rep").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L), regime)
+    }
+  }
+
+  test("connectedComponents below the driver-finish bound: no round jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // a 200-node path: the loop pays ten or more checkpointed rounds here
+    val pairs = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "cc-barrier"))
+          barrier.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val labels = try {
+      val labels = TextPipeline.connectedComponents(pairs)
+      // the listener bus is asynchronous but ordered: once this job's
+      // start arrives, every job the call above ran has been counted
+      sc.setJobGroup("cc-barrier", "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(barrier.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      labels
+    } finally sc.removeSparkListener(listener)
+    // the edges checkpoint (two jobs: AQE runs its shuffle map stage as
+    // a job of its own) and the collect; the loop would add 2+ per round
+    assert(jobs.get() <= 3,
+      s"${jobs.get()} jobs: expected the edges checkpoint and the collect only")
+    assert(labels.collect().forall(_.getLong(1) == 0L))
+  }
+
+  test("connectedComponents loop: the keyed edges checkpoint keeps its " +
+    "partitioning under AQE") {
+    import org.apache.spark.sql.catalyst.plans.physical.{CoalescedHashPartitioning, HashPartitioning}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val pairs = (0L until 50L).map(i => (i, (i * 7 + 1) % 50)).toDF("a", "b")
+    val (edges, n) = TextPipeline.componentEdges(pairs)
+    assert(n == 100L)
+    val lr = edges.queryExecution.logical match {
+      case lr: LogicalRDD => lr
+      case other => fail(s"edges are not a checkpoint scan: ${other.getClass}")
+    }
+    // the loop's prop join is keyed on dst; a lost (unknown)
+    // partitioning would re-shuffle the edge set every round
+    val keys = lr.outputPartitioning match {
+      case h: HashPartitioning => h.expressions
+      case c: CoalescedHashPartitioning => c.from.expressions
+      case p => fail(s"restore skipped: $p")
+    }
+    assert(keys.flatMap(_.references.map(_.name)) == Seq("dst"), keys)
   }
 
   test("hammingNeighborPairs (banded) == brute-force all-pairs, any k") {

@@ -476,6 +476,43 @@ object Advanced {
     sessionizeChunked(Tables.events(s, d))
   }
 
+  /** One event-time day in epoch microseconds: the day tier's chunk and
+    * the per-(user, day) probe's grouping. */
+  private final val DayMicros = 86400000000L
+
+  /** Rows per count-tier chunk. */
+  private final val RowsPerChunk = 262144L
+
+  /** The chunk policy of the routed events family. Adds `chunk` to
+    * `ev`, which carries user_id, event_id and the event time in epoch
+    * micros as `us`; chunks partition each user's (us, event_id)-ordered
+    * timeline into consecutive groups, which is all every `*FromChunks`
+    * stitch assumes.
+    *  - Day tier (`rowsPerChunk` None): the event-time day. Max task is
+    *    bounded by rows per user-DAY, with no extra exchange.
+    *  - Count tier: ⌊(rank−1)/rowsPerChunk⌋ over the skew-safe
+    *    [[RangeStitch.withRangeRank]] per-user (us, event_id) position,
+    *    so EVERY chunk holds ≤ rowsPerChunk rows whatever the time
+    *    distribution. The day tier's residual assumption (rows per
+    *    user-DAY bounded) fails on a single-day flood: at a 4M-row
+    *    one-day hot user its max tasks measured 10–17 s
+    *    (SKEW_r11_dayflood.json, SKEW_r12_dayflood.json). The price is
+    *    one range exchange + checkpoint, paid only on the escalation
+    *    branch of [[routeChunked]]. us = unix_micros(ts) is order- and
+    *    tie-equivalent to ts at the micros precision the fixture
+    *    contract pins.
+    * Measured choice between the two (skew2: 10M events, a 4.0M-row
+    * hot user spread over days, local[4]): the day tier is faster on 8
+    * of the 9 operators (sessionize 44.4 vs 54.7 s, transitions 17.5
+    * vs 30.0 s, twap 15.9 vs 30.3 s), so both tiers stay. */
+  private def withChunk(ev: DataFrame, rowsPerChunk: Option[Long],
+                        us: String = "us"): DataFrame = rowsPerChunk match {
+    case None => ev.withColumn("chunk", floor(col(us) / DayMicros))
+    case Some(n) =>
+      RangeStitch.withRangeRank(ev, "user_id", Seq(us, "event_id"), "rk")
+        .withColumn("chunk", floor((col("rk") - 1) / n)).drop("rk")
+  }
+
   /** The q158 plan as a library function: skew-safe chunked
     * sessionization — max task bounded by rows-per-user-DAY, ~2× the
     * dense plan's wall on even data (see BASELINE). Output schema and
@@ -483,43 +520,26 @@ object Advanced {
     * millions of rows, one day) collapses the day chunk back into one
     * task — [[sessionizeCountChunked]] is the escalation tier
     * ([[sessionizeAuto]] routes to it on a measured hot user-DAY). */
-  def sessionizeChunked(events: DataFrame): DataFrame = {
-    val chunkUs = 86400000000L // one event-time day per chunk
-    sessionizeFromChunks(events
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("chunk", floor(col("us") / chunkUs)))
-  }
+  def sessionizeChunked(events: DataFrame): DataFrame =
+    sessionizeFromChunks(events, None)
 
-  /** [[sessionizeChunked]] with COUNT-based chunks: chunk =
-    * ⌊(rank−1)/rowsPerChunk⌋ over the skew-safe
-    * [[RangeStitch.withRangeRank]] per-user (ts, event_id) position —
-    * so EVERY chunk holds ≤ rowsPerChunk rows whatever the time
-    * distribution. The day-chunk form's residual assumption
-    * (rows-per-user-DAY bounded) fails on a single-day flood — at a
-    * 4M-row one-day hot user its max tasks measured 10–17 s
-    * (SKEW_r11_dayflood.json); this form bounds them by construction.
-    * The stitch algebra is unchanged: it only assumes chunks partition
-    * each user's timeline in (ts, event_id) order, which rank-order
-    * chunks do by construction (us = unix_micros(ts) is order- and
-    * tie-equivalent to ts at the micros precision the fixture
-    * contract pins). Costs one extra range exchange + checkpoint over
-    * the day form — the escalation tier's price, paid only above the
-    * [[sessionizeAuto]] user-day probe threshold. */
+  /** [[sessionizeChunked]] on the count tier of [[withChunk]]: every
+    * chunk holds ≤ rowsPerChunk rows, so a single-day flood no longer
+    * collapses into one task. */
   def sessionizeCountChunked(events: DataFrame,
-                             rowsPerChunk: Long = 262144L): DataFrame = {
-    val ranked = RangeStitch.withRangeRank(
-      events.select(col("user_id"), col("event_id"), col("ts"))
-        .withColumn("us", unix_micros(col("ts"))),
-      "user_id", Seq("us", "event_id"), "rk")
-    sessionizeFromChunks(
-      ranked.withColumn("chunk", floor((col("rk") - 1) / rowsPerChunk))
-        .drop("rk"))
-  }
+                             rowsPerChunk: Long = RowsPerChunk): DataFrame =
+    sessionizeFromChunks(events, Some(rowsPerChunk))
 
-  /** Shared stitch body of the two chunked forms: expects
-    * (user_id, event_id, ts, us, chunk) where chunks partition each
-    * user's (ts, event_id)-ordered timeline into consecutive groups. */
-  private def sessionizeFromChunks(ev: DataFrame): DataFrame = {
+  /** Shared stitch body of the two chunked forms, on [[withChunk]]'s
+    * chunks. The day tier chunks `events` as given; the count tier
+    * first prunes to the three columns the stitch reads, because its
+    * range rank checkpoints whatever it is given. */
+  private def sessionizeFromChunks(events: DataFrame,
+                                   rowsPerChunk: Option[Long]): DataFrame = {
+    val input = if (rowsPerChunk.isEmpty) events
+      else events.select(col("user_id"), col("event_id"), col("ts"))
+    val ev = withChunk(input.withColumn("us", unix_micros(col("ts"))),
+      rowsPerChunk)
     val w2 = Window.partitionBy("user_id", "chunk").orderBy("ts", "event_id")
     val cum2 = w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wChunks = Window.partitionBy("user_id").orderBy("chunk")
@@ -553,75 +573,15 @@ object Advanced {
       .orderBy("user_id", "sid")
   }
 
-  /** Estimated row count of the HOTTEST user, from a deterministic
-    * hash sample (no rand() — reproducible across runs/retries): one
-    * scan-local filter + a map-side-combined count, and the driver
-    * reads ONE row (the max). The [[routeBySkew]] decision input;
-    * public so callers can route OTHER per-user operators the same
-    * way. `sampleMod` keeps 1-in-`sampleMod` events.
-    *
-    * Contract and cost notes (ADVICE r10):
-    *  - the sample hashes struct(user_id, event_id, ts), so it stays
-    *    usable even when event_id repeats ACROSS users; within one
-    *    user the (event_id, ts) pair must vary for the sample to be
-    *    unbiased — a frame where a user's rows are byte-identical on
-    *    both columns is all-or-nothing for that user. The fixture
-    *    contract (unique event_id) is the ideal case.
-    *  - this is an EAGER action that re-evaluates the full input
-    *    lineage (one extra scan per UNCACHED call). Callers routing
-    *    several operators over the same table should pass a
-    *    `probeCacheKey` to the auto variants (or cache/checkpoint
-    *    `events`) so the probe runs once per table, not per query. */
-  def hottestKeyRows(events: DataFrame, sampleMod: Int = 100): Long = {
-    val est = events
-      .where(pmod(hash(struct(col("user_id"), col("event_id"), col("ts"))),
-        lit(sampleMod)) === 0)
-      .groupBy("user_id").count()
-      .agg(max("count")).first()
-    if (est.isNullAt(0)) 0L else est.getLong(0) * sampleMod
-  }
-
-  /** Process-wide memo for [[hottestKeyRows]] probes, keyed by an
-    * EXPLICIT caller-chosen key (the registry passes the fixture dir):
-    * eight routed registry queries over the same events table then pay
-    * ONE probe scan per JVM, not eight (VERDICT r10 #1's batch-probe
-    * note). An explicit key rather than plan identity because two
-    * `spark.read.parquet(dir)` calls build distinct file indexes — plan
-    * equality would silently never hit. Callers mutating a table
-    * in-place mid-JVM must use a fresh key (the registry's fixture dirs
-    * are immutable). Bounded: one entry per (table, sampleMod) pair. */
-  private val hotKeyProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), java.lang.Long]()
-
-  /** [[hottestKeyRows]] through the process-wide memo. */
-  def hottestKeyRowsCached(events: DataFrame, cacheKey: String,
-                           sampleMod: Int = 100): Long =
-    hotKeyProbeCache.computeIfAbsent((cacheKey, sampleMod),
-      _ => java.lang.Long.valueOf(hottestKeyRows(events, sampleMod)))
-      .longValue()
-
-  /** Estimated row count of the hottest (user, event-time DAY) pair —
-    * the day-chunk tier's residual-exposure probe (same hash sample as
-    * [[hottestKeyRows]], grouped one level finer). Only consulted
-    * AFTER the hot-user probe has already routed away from the dense
-    * plan, so even-keyed corpora never pay this scan. */
-  def hottestUserDayRows(events: DataFrame, sampleMod: Int = 100): Long = {
-    val est = events
-      .where(pmod(hash(struct(col("user_id"), col("event_id"), col("ts"))),
-        lit(sampleMod)) === 0)
-      .groupBy(col("user_id"),
-        floor(unix_micros(col("ts")) / lit(86400000000L)).as("day"))
-      .count()
-      .agg(max("count")).first()
-    if (est.isNullAt(0)) 0L else est.getLong(0) * sampleMod
-  }
-
-  /** [[hottestUserDayRows]] through the process-wide memo. */
-  def hottestUserDayRowsCached(events: DataFrame, cacheKey: String,
-                               sampleMod: Int = 100): Long =
-    hotKeyProbeCache.computeIfAbsent((cacheKey + "#userday", sampleMod),
-      _ => java.lang.Long.valueOf(hottestUserDayRows(events, sampleMod)))
-      .longValue()
+  /** The events family's two skew probes group by the user and by the
+    * (user, event-time DAY); both hash-sample (user_id, event_id, ts),
+    * so an event_id repeated ACROSS users is harmless (see
+    * [[RangeStitch.hottestKeyRows]] for the sample contract). */
+  private[graft] val perUser: Seq[Column] = Seq(col("user_id"))
+  private[graft] val perUserDay: Seq[Column] = Seq(col("user_id"),
+    floor(unix_micros(col("ts")) / lit(DayMicros)).as("day"))
+  private[graft] val eventSample: Seq[Column] =
+    Seq(col("user_id"), col("event_id"), col("ts"))
 
   /** Measured-skew crossover default, from the CROSSOVER_r10 ladder
     * (hot user at 0.5M/1M/2M/4M rows over 10M events, sessionize): the
@@ -635,86 +595,58 @@ object Advanced {
     * default is this measured value, overridable per call. */
   val defaultHotKeyRowThreshold: Long = 2500000L
 
-  /** Route a per-user event operator between its DENSE plan (fastest
-    * on even keys; max task linear in the hottest user's rows) and its
-    * CHUNKED q158-template plan (max task bounded by rows-per-user-DAY;
-    * 1.3–2.8× bookkeeping tax on even data) by MEASURED key skew — the
-    * exact/LSH `dedupCorpus(method="auto")` pattern applied to window
-    * skew. A hash-sampled per-user count probe ([[hottestKeyRows]] —
-    * one cheap pass, one driver row) estimates the hottest user's
-    * volume; at or above `hotKeyRowThreshold` the chunked plan runs (at
-    * skew2's 4M-row hot user it wins wall AND max task — BASELINE
-    * "SKEW2 STRESS"), below it the dense plan keeps the even-data cost.
-    * Both plans produce IDENTICAL rows for every routed operator
-    * (hash-proven at five SFs; stitch edges pinned in AdvancedSpec), so
-    * the switch never changes results, only the physical plan.
-    * `probeCacheKey` batches the probe across queries over the same
-    * table ([[hottestKeyRowsCached]]). */
-  def routeBySkew(events: DataFrame,
-                  dense: DataFrame => DataFrame,
-                  chunked: DataFrame => DataFrame,
-                  hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
-                  sampleMod: Int = 100,
-                  probeCacheKey: Option[String] = None): DataFrame = {
-    val hot = probeCacheKey match {
-      case Some(k) => hottestKeyRowsCached(events, k, sampleMod)
-      case None    => hottestKeyRows(events, sampleMod)
-    }
-    if (hot >= hotKeyRowThreshold) chunked(events) else dense(events)
-  }
-
-  /** Three-tier routing: dense below the hot-user threshold;
-    * day-chunked above it; count-chunked when the hottest single
-    * (user, DAY) ALSO exceeds `escalationThreshold` — the single-day-
-    * flood cure generalized from sessionize (SKEW_r11_dayflood /
-    * SKEW_r12_dayflood: a bot-flood day collapses the day-chunk tier
-    * back into one task; the count-chunk tier bounds every chunk by
-    * row COUNT for ANY time distribution). The user-day probe runs
-    * lazily, only after tier 1 has already routed away from dense, so
-    * even-keyed corpora never pay the second scan. */
-  def routeBySkew3(events: DataFrame,
-                   dense: DataFrame => DataFrame,
-                   chunked: DataFrame => DataFrame,
-                   countChunked: DataFrame => DataFrame,
-                   hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
-                   sampleMod: Int = 100,
-                   probeCacheKey: Option[String] = None,
-                   escalationThreshold: Long =
-                     RangeStitch.defaultHotKeyRowThreshold): DataFrame =
-    routeBySkew(events, dense, ev => {
-      val hotDay = probeCacheKey match {
-        case Some(k) => hottestUserDayRowsCached(ev, k, sampleMod)
-        case None    => hottestUserDayRows(ev, sampleMod)
-      }
-      if (hotDay >= escalationThreshold) countChunked(ev) else chunked(ev)
-    }, hotKeyRowThreshold, sampleMod, probeCacheKey)
+  /** Three-tier routing of a per-user events operator, as two nested
+    * [[RangeStitch.routeBySkew]] calls — the exact/LSH
+    * `dedupCorpus(method="auto")` pattern applied to window skew:
+    *  - the hottest user below `hotKeyRowThreshold` rows: `dense`
+    *    (fastest on even keys; max task linear in the hottest user's
+    *    rows);
+    *  - else the hottest (user, DAY) below `escalationThreshold`: the
+    *    day tier of [[withChunk]] (max task bounded by rows per
+    *    user-DAY; 1.3–2.8× bookkeeping tax on even data; at skew2's
+    *    4M-row hot user it wins wall AND max task, BASELINE "SKEW2
+    *    STRESS");
+    *  - else the count tier (the single-day flood: a bot-flood day
+    *    collapses the day tier back into one task, SKEW_r11_dayflood /
+    *    SKEW_r12_dayflood).
+    * The per-(user, day) probe runs only on the inner branch, so
+    * even-keyed corpora never pay the second scan. All three plans
+    * produce IDENTICAL rows (hash-proven at five SFs; stitch edges
+    * pinned in AdvancedSpec), so routing changes only the physical
+    * plan. `probeCacheKey` memoizes both probes per table
+    * ([[RangeStitch.hottestKeyRowsCached]]). */
+  private def routeChunked(events: DataFrame, hotKeyRowThreshold: Long,
+                           sampleMod: Int, probeCacheKey: Option[String],
+                           escalationThreshold: Long =
+                             RangeStitch.defaultHotKeyRowThreshold)(
+                            dense: => DataFrame,
+                            chunked: Option[Long] => DataFrame): DataFrame =
+    RangeStitch.routeBySkew(events, perUser, eventSample,
+      hotKeyRowThreshold, sampleMod, probeCacheKey)(
+      dense,
+      RangeStitch.routeBySkew(events, perUserDay, eventSample,
+        escalationThreshold, sampleMod, probeCacheKey)(
+        chunked(None), chunked(Some(RowsPerChunk))))
 
   /** [[sessionize]] vs [[sessionizeChunked]] vs
-    * [[sessionizeCountChunked]] by measured skew — see [[routeBySkew]].
-    * The q44 registry entry routes through this. Three tiers: dense
-    * below the hot-user threshold; day-chunked above it; count-chunked
-    * when the hottest single (user, DAY) ALSO exceeds the
-    * [[RangeStitch.defaultHotKeyRowThreshold]] (the same hot-window
-    * phenomenon one level down — a single-day flood measured 10–17 s
-    * max tasks on the day-chunk form, SKEW_r11_dayflood.json). The
-    * user-day probe runs lazily, only after tier 1 has already routed
-    * away from dense. `escalationThreshold` (the tier-3 trigger,
-    * default = the RangeStitch kernel's measured crossover) is a
-    * parameter so the routing branch itself is unit-drivable (ADVICE
-    * r11) — AdvancedSpec forces tier 3 through THIS router on a small
-    * fixture and pins the routed output. */
+    * [[sessionizeCountChunked]] by measured skew ([[routeChunked]]).
+    * The q44 registry entry routes through this. `escalationThreshold`
+    * (the tier-3 trigger, default = the RangeStitch kernel's measured
+    * crossover) is a parameter so the routing branch itself is
+    * unit-drivable (ADVICE r11) — AdvancedSpec forces tier 3 through
+    * THIS router on a small fixture and pins the routed output. */
   def sessionizeAuto(events: DataFrame,
                      hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
                      sampleMod: Int = 100,
                      probeCacheKey: Option[String] = None,
                      escalationThreshold: Long =
                        RangeStitch.defaultHotKeyRowThreshold): DataFrame =
-    routeBySkew3(events, sessionize, sessionizeChunked,
-      sessionizeCountChunked(_), hotKeyRowThreshold, sampleMod,
-      probeCacheKey, escalationThreshold)
+    routeChunked(events, hotKeyRowThreshold, sampleMod, probeCacheKey,
+      escalationThreshold)(sessionize(events), sessionizeFromChunks(events, _))
 
-  /** [[funnelDepth]] vs [[funnelDepthChunked]] by measured skew — see
-    * [[routeBySkew]]. The q62 registry entry routes through this.
+  /** [[funnelDepth]] vs [[funnelDepthChunked]] vs
+    * [[funnelDepthCountChunked]] by measured skew ([[routeChunked]]).
+    * The q62 registry entry routes through this.
     *
     * Three-tier since late r12 — a REVERSED adjudication: the r11
     * "escalation made q62 worse (8.7 → 18.2 s)" comparison turned out
@@ -729,83 +661,72 @@ object Advanced {
                       hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
                       sampleMod: Int = 100,
                       probeCacheKey: Option[String] = None): DataFrame =
-    routeBySkew3(events, funnelDepth, funnelDepthChunked,
-      funnelDepthCountChunked(_),
-      hotKeyRowThreshold, sampleMod, probeCacheKey)
+    routeChunked(events, hotKeyRowThreshold, sampleMod, probeCacheKey)(
+      funnelDepth(events), funnelDepthFromChunks(events, _))
 
-  /** [[funnelDepths]] vs [[funnelDepthsChunked]] by measured skew — see
-    * [[routeBySkew]]. The q142 registry entry routes through this. */
+  /** [[funnelDepths]] vs its chunked twins by measured skew
+    * ([[routeChunked]]). The q142 registry entry routes through this. */
   def funnelDepthsAuto(events: DataFrame, deltaMicros: Long,
                        hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
                        sampleMod: Int = 100,
                        probeCacheKey: Option[String] = None): DataFrame =
-    routeBySkew3(events, funnelDepths(_, deltaMicros),
-      funnelDepthsChunked(_, deltaMicros),
-      funnelDepthsCountChunked(_, deltaMicros),
-      hotKeyRowThreshold, sampleMod, probeCacheKey)
+    routeChunked(events, hotKeyRowThreshold, sampleMod, probeCacheKey)(
+      funnelDepths(events, deltaMicros),
+      funnelDepthsFromChunks(events, deltaMicros, _))
 
-  /** [[transitions]] vs [[transitionsChunked]] vs [[transitionsCountChunked]] by the
-    * two measured probes ([[routeBySkew3]] — the SKEW_r12_dayflood
-    * escalation). The q107 registry entry routes through this. */
+  /** [[transitions]] vs its chunked twins by measured skew
+    * ([[routeChunked]]). The q107 registry entry routes through this. */
   def transitionsAuto(events: DataFrame,
                       hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
                       sampleMod: Int = 100,
                       probeCacheKey: Option[String] = None): DataFrame =
-    routeBySkew3(events, transitions, transitionsChunked,
-      transitionsCountChunked(_),
-      hotKeyRowThreshold, sampleMod, probeCacheKey)
+    routeChunked(events, hotKeyRowThreshold, sampleMod, probeCacheKey)(
+      transitions(events), transitionsFromChunks(events, _))
 
-  /** [[ewma]] vs [[ewmaChunked]] vs [[ewmaCountChunked]] by the
-    * two measured probes ([[routeBySkew3]] — the SKEW_r12_dayflood
-    * escalation). The q112 registry entry routes through this. */
+  /** [[ewma]] vs its chunked twins by measured skew ([[routeChunked]]).
+    * The q112 registry entry routes through this. */
   def ewmaAuto(events: DataFrame,
                hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
                sampleMod: Int = 100,
                probeCacheKey: Option[String] = None): DataFrame =
-    routeBySkew3(events, ewma, ewmaChunked, ewmaCountChunked(_),
-      hotKeyRowThreshold, sampleMod, probeCacheKey)
+    routeChunked(events, hotKeyRowThreshold, sampleMod, probeCacheKey)(
+      ewma(events), ewmaFromChunks(events, _))
 
-  /** [[rollingMedian]] vs [[rollingMedianChunked]] vs [[rollingMedianCountChunked]] by the
-    * two measured probes ([[routeBySkew3]] — the SKEW_r12_dayflood
-    * escalation). The q115 registry entry routes through this. */
+  /** [[rollingMedian]] vs its chunked twins by measured skew
+    * ([[routeChunked]]). The q115 registry entry routes through this. */
   def rollingMedianAuto(events: DataFrame,
                         hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
                         sampleMod: Int = 100,
                         probeCacheKey: Option[String] = None): DataFrame =
-    routeBySkew3(events, rollingMedian, rollingMedianChunked,
-      rollingMedianCountChunked(_),
-      hotKeyRowThreshold, sampleMod, probeCacheKey)
+    routeChunked(events, hotKeyRowThreshold, sampleMod, probeCacheKey)(
+      rollingMedian(events), rollingMedianFromChunks(events, _))
 
-  /** [[twap]] vs [[twapChunked]] vs [[twapCountChunked]] by the
-    * two measured probes ([[routeBySkew3]] — the SKEW_r12_dayflood
-    * escalation). The q118 registry entry routes through this. */
+  /** [[twap]] vs its chunked twins by measured skew ([[routeChunked]]).
+    * The q118 registry entry routes through this. */
   def twapAuto(events: DataFrame,
                hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
                sampleMod: Int = 100,
                probeCacheKey: Option[String] = None): DataFrame =
-    routeBySkew3(events, twap, twapChunked, twapCountChunked(_),
-      hotKeyRowThreshold, sampleMod, probeCacheKey)
+    routeChunked(events, hotKeyRowThreshold, sampleMod, probeCacheKey)(
+      twap(events), twapFromChunks(events, _))
 
-  /** [[seqPattern]] vs [[seqPatternChunked]] vs [[seqPatternCountChunked]] by the
-    * two measured probes ([[routeBySkew3]] — the SKEW_r12_dayflood
-    * escalation). The q154 registry entry routes through this. */
+  /** [[seqPattern]] vs its chunked twins by measured skew
+    * ([[routeChunked]]). The q154 registry entry routes through this. */
   def seqPatternAuto(events: DataFrame,
                      hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
                      sampleMod: Int = 100,
                      probeCacheKey: Option[String] = None): DataFrame =
-    routeBySkew3(events, seqPattern, seqPatternChunked,
-      seqPatternCountChunked(_),
-      hotKeyRowThreshold, sampleMod, probeCacheKey)
+    routeChunked(events, hotKeyRowThreshold, sampleMod, probeCacheKey)(
+      seqPattern(events), seqPatternFromChunks(events, _))
 
-  /** [[scd2]] vs [[scd2Chunked]] vs [[scd2CountChunked]] by the
-    * two measured probes ([[routeBySkew3]] — the SKEW_r12_dayflood
-    * escalation). The q155 registry entry routes through this. */
+  /** [[scd2]] vs its chunked twins by measured skew ([[routeChunked]]).
+    * The q155 registry entry routes through this. */
   def scd2Auto(events: DataFrame,
                hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
                sampleMod: Int = 100,
                probeCacheKey: Option[String] = None): DataFrame =
-    routeBySkew3(events, scd2, scd2Chunked, scd2CountChunked(_),
-      hotKeyRowThreshold, sampleMod, probeCacheKey)
+    routeChunked(events, hotKeyRowThreshold, sampleMod, probeCacheKey)(
+      scd2(events), scd2FromChunks(events, _))
 
   /** q45: full cube with grouping indicators (A7 — rollup is q10). */
   val q45_cube = QueryDef(
@@ -927,7 +848,7 @@ object Advanced {
     * counts if it occurs AFTER the previous one (strict event-order
     * state machine, not bag-of-events).
     *
-    * Routed by MEASURED skew ([[routeBySkew3]], three tiers since late
+    * Routed by MEASURED skew ([[routeChunked]], three tiers since late
     * r12): even keys run [[funnelDepth]] (one per-user collect + single
     * fold), a Zipf-hot key runs [[funnelDepthChunked]] — the q158
     * skew-safe template applied to the funnel DFA (VERDICT r9 #1: the
@@ -987,12 +908,7 @@ object Advanced {
     * (user_id, ts, event_id, event_type) frame so specs can hand-build
     * orderings. */
   def funnelDepth(events: DataFrame): DataFrame =
-    events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        when(col("event_type") === "view", 1L)
-          .when(col("event_type") === "click", 2L)
-          .when(col("event_type") === "purchase", 3L)
-          .otherwise(0L).as("code"))
+    funnelCoded(events, col("ts"))
       .groupBy("user_id")
       .agg(sort_array(collect_list(struct(col("ts"), col("event_id"), col("code"))))
         .as("evs"))
@@ -1014,43 +930,32 @@ object Advanced {
     * bounded by rows-per-user-DAY instead of rows-per-user; all
     * arithmetic is integral, so results are bit-exact vs the dense
     * fold (pinned in AdvancedSpec, incl. cross-midnight stage order). */
-  def funnelDepthChunked(events: DataFrame): DataFrame = {
-    val chunkUs = 86400000000L // one event-time day per chunk (q158)
-    funnelDepthFromChunks(funnelCoded(events)
-      .withColumn("chunk", floor(unix_micros(col("ts")) / chunkUs)))
-  }
+  def funnelDepthChunked(events: DataFrame): DataFrame =
+    funnelDepthFromChunks(events, None)
 
-  /** [[funnelDepthChunked]] with COUNT-based chunks (the
-    * [[sessionizeCountChunked]] escalation applied to the funnel DFA):
-    * chunk = ⌊(rank−1)/rowsPerChunk⌋ over the skew-safe RangeStitch
-    * per-user position, so BOTH the per-chunk collect_list buffer AND
-    * the scan-local vector fold are bounded by rowsPerChunk for ANY
-    * time distribution (the day form's 4M-struct single-day-flood
-    * buffer measured 2.6–4.1 s max tasks, SKEW_r11_dayflood.json).
-    * The 4-vector composition is split-point-agnostic — it composes
-    * over ANY ordered partition of the user's code sequence — so the
-    * stitch is unchanged. */
+  /** [[funnelDepthChunked]] on the count tier of [[withChunk]]: BOTH the
+    * per-chunk collect_list buffer AND the scan-local vector fold are
+    * bounded by rowsPerChunk for ANY time distribution (the day form's
+    * 4M-struct single-day-flood buffer measured 2.6–4.1 s max tasks,
+    * SKEW_r11_dayflood.json). The 4-vector composition is
+    * split-point-agnostic — it composes over ANY ordered partition of
+    * the user's code sequence — so the stitch is unchanged. */
   def funnelDepthCountChunked(events: DataFrame,
-                              rowsPerChunk: Long = 262144L): DataFrame = {
-    val ranked = RangeStitch.withRangeRank(
-      funnelCoded(events).withColumn("us", unix_micros(col("ts"))),
-      "user_id", Seq("us", "event_id"), "rk")
-    funnelDepthFromChunks(
-      ranked.withColumn("chunk", floor((col("rk") - 1) / rowsPerChunk))
-        .drop("rk", "us"))
-  }
+                              rowsPerChunk: Long = RowsPerChunk): DataFrame =
+    funnelDepthFromChunks(events, Some(rowsPerChunk))
 
-  /** The funnel stage coding shared by the chunked forms. */
-  private def funnelCoded(events: DataFrame): DataFrame =
-    events.select(col("user_id"), col("ts"), col("event_id"),
+  /** (user_id, `time`, event_id, code): the funnel stage coding
+    * (view 1, click 2, purchase 3, else 0) shared by the q62 and q142
+    * plans, dense and chunked. */
+  private def funnelCoded(events: DataFrame, time: Column): DataFrame =
+    events.select(col("user_id"), time, col("event_id"),
       when(col("event_type") === "view", 1L)
         .when(col("event_type") === "click", 2L)
         .when(col("event_type") === "purchase", 3L)
         .otherwise(0L).as("code"))
 
-  /** Shared DFA-fold body: expects (user_id, ts, event_id, code, chunk)
-    * where chunks partition each user's (ts, event_id)-ordered stream
-    * into consecutive groups.
+  /** Shared DFA-fold body of the two chunked forms, on the stage codes
+    * chunked by [[withChunk]].
     *
     * The per-chunk 4-vector is a TYPED compiled fold (r12 — the q142
     * cure, third confirmed site): the previous `aggregate`-HOF form is
@@ -1059,10 +964,13 @@ object Advanced {
     * plans (walls 68.5/15.8/15.1 s — the r11 "escalation made q62
     * worse" adjudication was itself taken under an unknown C2 draw).
     * All-integer arithmetic, so the typed loop is trivially bit-exact. */
-  private def funnelDepthFromChunks(coded: DataFrame): DataFrame = {
-    val spark = coded.sparkSession
+  private def funnelDepthFromChunks(events: DataFrame,
+                                    rowsPerChunk: Option[Long]): DataFrame = {
+    val spark = events.sparkSession
     import spark.implicits._
-    coded
+    withChunk(funnelCoded(events, col("ts"))
+      .withColumn("us", unix_micros(col("ts"))),
+      rowsPerChunk).drop("us")
       .select(col("user_id"), col("chunk"), unix_micros(col("ts")).as("tsm"),
         col("event_id"), col("code"))
       .as[(Long, Long, Long, Long, Long)]
@@ -1812,7 +1720,7 @@ object Advanced {
     * and a next-event rank: the session-path / next-action model a
     * behavioural pipeline trains.
     *
-    * Routed by MEASURED skew ([[routeBySkew]], VERDICT r10 #1): even
+    * Routed by MEASURED skew ([[routeChunked]], VERDICT r10 #1): even
     * keys run [[transitions]] (one per-user lag window — the cheapest
     * correct plan), a Zipf-hot key runs [[transitionsChunked]] (the
     * q158 template; max task bounded by rows-per-user-DAY — skew2 A/B
@@ -1869,37 +1777,25 @@ object Advanced {
     * NULL boundary src and is filtered, exactly as the plain lag's
     * NULL. The only event-sized exchange is the (user, chunk) window
     * one (same size as the dense (user) one). */
-  def transitionsChunked(events: DataFrame): DataFrame = {
-    val chunkUs = 86400000000L // one event-time day per chunk (q158)
-    transitionsFromChunks(events
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("chunk", floor(unix_micros(col("ts")) / chunkUs)))
-  }
+  def transitionsChunked(events: DataFrame): DataFrame =
+    transitionsFromChunks(events, None)
 
   /** The q107 plan, COUNT-CHUNKED — the single-day-flood escalation
     * tier (SKEW_r12_dayflood: the flood day collapses the day-chunk
     * tier's within-chunk lag window into one 11.3 s sort task; count
     * chunks bound the window partition at `rowsPerChunk` rows for ANY
-    * time distribution). Same boundary algebra as [[transitionsChunked]]
-    * — count-chunk ids are consecutive per user in (ts, event_id)
-    * order, which is all [[transitionsFromChunks]] requires. */
+    * time distribution). Same boundary algebra as [[transitionsChunked]]. */
   def transitionsCountChunked(events: DataFrame,
-                              rowsPerChunk: Long = 262144L): DataFrame = {
-    val ranked = RangeStitch.withRangeRank(
-      events.select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"))
-        .withColumn("us", unix_micros(col("ts"))),
-      "user_id", Seq("us", "event_id"), "rk")
-    transitionsFromChunks(ranked
-      .withColumn("chunk", floor((col("rk") - 1) / rowsPerChunk))
-      .select("user_id", "ts", "event_id", "event_type", "chunk"))
-  }
+                              rowsPerChunk: Long = RowsPerChunk): DataFrame =
+    transitionsFromChunks(events, Some(rowsPerChunk))
 
-  /** Shared boundary-stitch body of the two chunked transition forms:
-    * expects (user_id, ts, event_id, event_type, chunk) where chunks
-    * partition each user's (ts, event_id)-ordered timeline into
-    * consecutive groups. */
-  private def transitionsFromChunks(ev: DataFrame): DataFrame = {
+  /** Shared boundary-stitch body of the two chunked transition forms,
+    * on (user_id, ts, event_id, event_type) chunked by [[withChunk]]. */
+  private def transitionsFromChunks(events: DataFrame,
+                                    rowsPerChunk: Option[Long]): DataFrame = {
+    val ev = withChunk(events
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("us", unix_micros(col("ts"))), rowsPerChunk).drop("us")
     val wChunks = Window.partitionBy("user_id").orderBy("chunk")
     val w2 = Window.partitionBy("user_id", "chunk")
       .orderBy("side", "ts", "event_id")
@@ -2109,7 +2005,7 @@ object Advanced {
     * #1: the old whole-history `collect_list` materialized a Zipf-hot
     * user's 4M-row stream as ONE array in ONE task).
     *
-    * Routed by MEASURED skew ([[routeBySkew]], VERDICT r10 #1): even
+    * Routed by MEASURED skew ([[routeChunked]], VERDICT r10 #1): even
     * keys run [[ewma]] — one per-user collect + flat fold, the exact
     * FP sequence of the oracle — a Zipf-hot key runs [[ewmaChunked]].
     * For unbounded streams the incremental form is one multiply-add
@@ -2201,37 +2097,31 @@ object Advanced {
     * dense plan. If a corpus ever trips the residual class, the
     * deterministic remediation is the dense arm (exact oracle FP
     * sequence) on that corpus, not a numeric knob. */
-  def ewmaChunked(events: DataFrame): DataFrame = {
-    val chunkUs = 86400000000L // one event-time day per chunk (q158)
-    ewmaFromChunks(events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"),
-        floor(unix_micros(col("ts")) / chunkUs).as("chunk")))
-  }
+  def ewmaChunked(events: DataFrame): DataFrame = ewmaFromChunks(events, None)
 
   /** The q112 plan, COUNT-CHUNKED — the single-day-flood escalation
     * tier (SKEW_r12_dayflood: a 4M-row bot-flood day collapses the
     * day-chunk tier's per-chunk collect+fold into one 15.8–46 s task;
     * chunking by RangeStitch rank bounds every chunk at `rowsPerChunk`
     * rows for ANY time distribution). Same stitch algebra as
-    * [[ewmaChunked]] — count-chunk ids are consecutive per user in
-    * (ts, event_id) order, which is all [[ewmaFromChunks]] requires. */
+    * [[ewmaChunked]]. */
   def ewmaCountChunked(events: DataFrame,
-                       rowsPerChunk: Long = 262144L): DataFrame = {
-    val ranked = RangeStitch.withRangeRank(
-      events.select(col("user_id"), col("ts"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-        .withColumn("us", unix_micros(col("ts"))),
-      "user_id", Seq("us", "event_id"), "rk")
-    ewmaFromChunks(ranked
-      .withColumn("chunk", floor((col("rk") - 1) / rowsPerChunk))
-      .select("user_id", "ts", "event_id", "cents", "chunk"))
-  }
+                       rowsPerChunk: Long = RowsPerChunk): DataFrame =
+    ewmaFromChunks(events, Some(rowsPerChunk))
 
-  /** Shared stitch body of the two chunked EWMA forms: expects
-    * (user_id, ts, event_id, cents, chunk) where chunks partition each
-    * user's (ts, event_id)-ordered timeline into consecutive groups. */
-  private def ewmaFromChunks(ev: DataFrame): DataFrame = {
+  /** (user_id, ts, event_id, cents, us): the value in integer cents and
+    * the event time in epoch micros — the input the chunked EWMA, TWAP
+    * and rolling-median forms hand to [[withChunk]]. */
+  private def centsEvents(events: DataFrame): DataFrame =
+    events.select(col("user_id"), col("ts"), col("event_id"),
+      round(col("value") * 100).cast("long").as("cents"),
+      unix_micros(col("ts")).as("us"))
+
+  /** Shared stitch body of the two chunked EWMA forms, on
+    * [[centsEvents]] chunked by [[withChunk]]. */
+  private def ewmaFromChunks(events: DataFrame,
+                             rowsPerChunk: Option[Long]): DataFrame = {
+    val ev = withChunk(centsEvents(events), rowsPerChunk).drop("us")
     val spark = ev.sparkSession
     import spark.implicits._
     // Per-chunk summaries as a TYPED compiled fold (r12 — the q142 r11
@@ -2290,7 +2180,7 @@ object Advanced {
     * a `collect_list` over the ROWS frame holds ≤ 7 values per row,
     * sorted and mid-picked scan-locally.
     *
-    * Routed by MEASURED skew ([[routeBySkew]], VERDICT r10 #1): even
+    * Routed by MEASURED skew ([[routeChunked]], VERDICT r10 #1): even
     * keys run [[rollingMedian]] (one per-user frame window), a
     * Zipf-hot key runs [[rollingMedianChunked]] (the q158 template —
     * the r10 skew2 stress measured the plain frame window at 8.6×
@@ -2345,13 +2235,8 @@ object Advanced {
     * — exactly its trailing window whether or not it crosses days
     * (sparse users spanning many near-empty days work because the run
     * tail accumulates ACROSS chunks, pinned in AdvancedSpec). */
-  def rollingMedianChunked(events: DataFrame): DataFrame = {
-    val chunkUs = 86400000000L // one event-time day per chunk (q158)
-    rollingMedianFromChunks(events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"),
-        floor(unix_micros(col("ts")) / chunkUs).as("chunk")))
-  }
+  def rollingMedianChunked(events: DataFrame): DataFrame =
+    rollingMedianFromChunks(events, None)
 
   /** The q115 plan, COUNT-CHUNKED — the single-day-flood escalation
     * tier, and the family's heaviest per-chunk work (SKEW_r12_dayflood:
@@ -2362,22 +2247,14 @@ object Advanced {
     * distribution; the tail-carry fold is chunk-id-agnostic, so the
     * algebra is [[rollingMedianFromChunks]] unchanged. */
   def rollingMedianCountChunked(events: DataFrame,
-                                rowsPerChunk: Long = 262144L): DataFrame = {
-    val ranked = RangeStitch.withRangeRank(
-      events.select(col("user_id"), col("ts"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-        .withColumn("us", unix_micros(col("ts"))),
-      "user_id", Seq("us", "event_id"), "rk")
-    rollingMedianFromChunks(ranked
-      .withColumn("chunk", floor((col("rk") - 1) / rowsPerChunk))
-      .select("user_id", "ts", "event_id", "cents", "chunk"))
-  }
+                                rowsPerChunk: Long = RowsPerChunk): DataFrame =
+    rollingMedianFromChunks(events, Some(rowsPerChunk))
 
-  /** Shared tail-carry body of the two chunked rolling-median forms:
-    * expects (user_id, ts, event_id, cents, chunk) where chunks
-    * partition each user's (ts, event_id)-ordered timeline into
-    * consecutive groups. */
-  private def rollingMedianFromChunks(ev: DataFrame): DataFrame = {
+  /** Shared tail-carry body of the two chunked rolling-median forms, on
+    * [[centsEvents]] chunked by [[withChunk]]. */
+  private def rollingMedianFromChunks(events: DataFrame,
+                                      rowsPerChunk: Option[Long]): DataFrame = {
+    val ev = withChunk(centsEvents(events), rowsPerChunk).drop("us")
     val wFrame2 = Window.partitionBy("user_id", "chunk")
       .orderBy("ts", "event_id").rowsBetween(-6, Window.currentRow)
     // last ≤n elements, positive-start form (negative slice starts error
@@ -2436,7 +2313,7 @@ object Advanced {
     * (milliseconds until the user's next event; the open-ended last
     * observation carries no weight).
     *
-    * Routed by MEASURED skew ([[routeBySkew]], VERDICT r10 #1): even
+    * Routed by MEASURED skew ([[routeChunked]], VERDICT r10 #1): even
     * keys run [[twap]] (one per-user lead window), a Zipf-hot key runs
     * [[twapChunked]] (the q158 template — the r10 skew2 stress
     * measured the plain lead window at ~5× median max-task, q107's lag
@@ -2489,13 +2366,7 @@ object Advanced {
     * event-sized exchange is the (user, chunk) window; the final
     * per-user aggregate map-side-combines, so its exchange moves
     * user-sized rows. */
-  def twapChunked(events: DataFrame): DataFrame = {
-    val chunkUs = 86400000000L // one event-time day per chunk (q158)
-    twapFromChunks(events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"),
-        floor(unix_micros(col("ts")) / chunkUs).as("chunk")))
-  }
+  def twapChunked(events: DataFrame): DataFrame = twapFromChunks(events, None)
 
   /** The q118 plan, COUNT-CHUNKED — the single-day-flood escalation
     * tier (SKEW_r12_dayflood: the flood day collapses the day-chunk
@@ -2503,21 +2374,14 @@ object Advanced {
     * chunks bound the window partition at `rowsPerChunk` rows for ANY
     * time distribution). Same pseudo-row algebra as [[twapChunked]]. */
   def twapCountChunked(events: DataFrame,
-                       rowsPerChunk: Long = 262144L): DataFrame = {
-    val ranked = RangeStitch.withRangeRank(
-      events.select(col("user_id"), col("ts"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-        .withColumn("us", unix_micros(col("ts"))),
-      "user_id", Seq("us", "event_id"), "rk")
-    twapFromChunks(ranked
-      .withColumn("chunk", floor((col("rk") - 1) / rowsPerChunk))
-      .select("user_id", "ts", "event_id", "cents", "chunk"))
-  }
+                       rowsPerChunk: Long = RowsPerChunk): DataFrame =
+    twapFromChunks(events, Some(rowsPerChunk))
 
-  /** Shared pseudo-row body of the two chunked TWAP forms: expects
-    * (user_id, ts, event_id, cents, chunk) where chunks partition each
-    * user's (ts, event_id)-ordered timeline into consecutive groups. */
-  private def twapFromChunks(ev: DataFrame): DataFrame = {
+  /** Shared pseudo-row body of the two chunked TWAP forms, on
+    * [[centsEvents]] chunked by [[withChunk]]. */
+  private def twapFromChunks(events: DataFrame,
+                             rowsPerChunk: Option[Long]): DataFrame = {
+    val ev = withChunk(centsEvents(events), rowsPerChunk).drop("us")
     // boundary rows ride the SAME window instead of joining back (the
     // q107 union pattern, mirrored for lead): each ACTIVE user-day's
     // first ts becomes a side=2 pseudo-row that sorts LAST in the
@@ -2750,7 +2614,7 @@ object Advanced {
     * report itself — per-depth user counts plus the "reached ≥ depth"
     * cumulative — not per-user rows.
     *
-    * Routed by MEASURED skew ([[routeBySkew]], VERDICT r10 #1): even
+    * Routed by MEASURED skew ([[routeChunked]], VERDICT r10 #1): even
     * keys run [[funnelDepths]] (one per-user collect + clock fold), a
     * Zipf-hot key runs [[funnelDepthsChunked]] — the q158 skew-safe
     * template with a threshold/continuation carry (see its scaladoc).
@@ -2772,13 +2636,7 @@ object Advanced {
     * `aggregate` HOF. Users exist in the output even at depth 0 (they
     * had events; none matched stage 1). */
   def funnelDepths(events: DataFrame, deltaMicros: Long): DataFrame =
-    events
-      .select(col("user_id"), unix_micros(col("ts")).as("tsm"),
-        col("event_id"),
-        when(col("event_type") === "view", 1L)
-          .when(col("event_type") === "click", 2L)
-          .when(col("event_type") === "purchase", 3L)
-          .otherwise(0L).as("code"))
+    funnelCoded(events, unix_micros(col("ts")).as("tsm"))
       .groupBy("user_id")
       .agg(sort_array(
         collect_list(struct(col("tsm"), col("event_id"), col("code"))))
@@ -2821,46 +2679,28 @@ object Advanced {
     * windows spanning empty days and cross-midnight re-anchoring).
     * Typed, not an `aggregate` HOF expression, since r11 — see the
     * in-body note on the interpreted fold's JIT bimodality. */
-  def funnelDepthsChunked(events: DataFrame, deltaMicros: Long): DataFrame = {
-    val chunkUs = 86400000000L // one event-time day per chunk (q158)
-    funnelDepthsFromChunks(windowFunnelCoded(events)
-      .withColumn("chunk", floor(col("tsm") / chunkUs)), deltaMicros)
-  }
-
-  private def windowFunnelCoded(events: DataFrame): DataFrame =
-    events.select(col("user_id"), unix_micros(col("ts")).as("tsm"),
-      col("event_id"),
-      when(col("event_type") === "view", 1L)
-        .when(col("event_type") === "click", 2L)
-        .when(col("event_type") === "purchase", 3L)
-        .otherwise(0L).as("code"))
+  def funnelDepthsChunked(events: DataFrame, deltaMicros: Long): DataFrame =
+    funnelDepthsFromChunks(events, deltaMicros, None)
 
   /** The q142 plan, COUNT-CHUNKED — the single-day-flood escalation
     * tier (the r11 dayflood artifact measured the day-chunk form at a
     * 9.2–9.8 s flood max task — the q107/q118 range, both of which
     * escalated and won in r12; the SKEW_r12 addendum measures this
-    * arm). Same DFA-summary algebra as [[funnelDepthsChunked]] —
-    * count-chunk ids are consecutive per user in (tsm, event_id)
-    * order, which is all the stitch requires. */
+    * arm). Same DFA-summary algebra as [[funnelDepthsChunked]]. */
   def funnelDepthsCountChunked(events: DataFrame, deltaMicros: Long,
-                               rowsPerChunk: Long = 262144L): DataFrame = {
-    val ranked = RangeStitch.withRangeRank(
-      windowFunnelCoded(events), "user_id", Seq("tsm", "event_id"), "rk")
-    funnelDepthsFromChunks(ranked
-      .withColumn("chunk", floor((col("rk") - 1) / rowsPerChunk))
-      .drop("rk"), deltaMicros)
-  }
+                               rowsPerChunk: Long = RowsPerChunk): DataFrame =
+    funnelDepthsFromChunks(events, deltaMicros, Some(rowsPerChunk))
 
-  /** Shared DFA-summary body of the two chunked window-funnel forms:
-    * expects (user_id, tsm, event_id, code, chunk) where chunks
-    * partition each user's (tsm, event_id)-ordered timeline into
-    * consecutive groups. */
-  private def funnelDepthsFromChunks(evWithChunk: DataFrame,
-                                     deltaMicros: Long): DataFrame = {
-    val spark = evWithChunk.sparkSession
+  /** Shared DFA-summary body of the two chunked window-funnel forms, on
+    * the stage codes chunked by [[withChunk]] over the epoch-micros
+    * `tsm`. */
+  private def funnelDepthsFromChunks(events: DataFrame, deltaMicros: Long,
+                                     rowsPerChunk: Option[Long]): DataFrame = {
+    val spark = events.sparkSession
     import spark.implicits._
     val NoT = Long.MinValue    // "threshold not seen" sentinel
-    val coded = evWithChunk
+    val coded = withChunk(funnelCoded(events,
+      unix_micros(col("ts")).as("tsm")), rowsPerChunk, "tsm")
       .select(col("user_id"), col("chunk"), col("tsm"), col("event_id"),
         col("code"))
       .as[(Long, Long, Long, Long, Long)]
@@ -3265,7 +3105,7 @@ object Advanced {
     * matching agrees between Java regex and DuckDB's RE2 for these
     * constructs (probed; no backreferences/lookahead).
     *
-    * Routed by MEASURED skew ([[routeBySkew]], VERDICT r10 #1): even
+    * Routed by MEASURED skew ([[routeChunked]], VERDICT r10 #1): even
     * keys run [[seqPattern]] (one per-user string_agg + regexp_count —
     * the oracle's own shape), a Zipf-hot key runs [[seqPatternChunked]]
     * (the q158 template — the old whole-history `string_agg`
@@ -3340,13 +3180,8 @@ object Advanced {
     * scaladoc for the segment-carry algebra. Bit-exact vs
     * [[seqPattern]] (pinned in AdvancedSpec across boundary-spanning
     * matches). */
-  def seqPatternChunked(events: DataFrame): DataFrame = {
-    val chunkUs = 86400000000L // one event-time day per chunk (q158)
-    seqPatternFromChunks(events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        seqCode(col("event_type")).as("code"),
-        floor(unix_micros(col("ts")) / chunkUs).as("chunk")))
-  }
+  def seqPatternChunked(events: DataFrame): DataFrame =
+    seqPatternFromChunks(events, None)
 
   private def seqCode(eventType: Column): Column =
     when(eventType === "view", "v")
@@ -3364,23 +3199,17 @@ object Advanced {
     * distribution; the segment-carry fold is chunk-id-agnostic, so
     * the algebra is [[seqPatternFromChunks]] unchanged. */
   def seqPatternCountChunked(events: DataFrame,
-                             rowsPerChunk: Long = 262144L): DataFrame = {
-    val ranked = RangeStitch.withRangeRank(
-      events.select(col("user_id"), col("ts"), col("event_id"),
-        seqCode(col("event_type")).as("code"))
-        .withColumn("us", unix_micros(col("ts"))),
-      "user_id", Seq("us", "event_id"), "rk")
-    seqPatternFromChunks(ranked
-      .withColumn("chunk", floor((col("rk") - 1) / rowsPerChunk))
-      .select("user_id", "ts", "event_id", "code", "chunk"))
-  }
+                             rowsPerChunk: Long = RowsPerChunk): DataFrame =
+    seqPatternFromChunks(events, Some(rowsPerChunk))
 
-  /** Shared segment-carry body of the two chunked seq-pattern forms:
-    * expects (user_id, ts, event_id, code, chunk) where chunks
-    * partition each user's (ts, event_id)-ordered timeline into
-    * consecutive groups. */
-  private def seqPatternFromChunks(ev: DataFrame): DataFrame = {
-    val chunkStr = ev
+  /** Shared segment-carry body of the two chunked seq-pattern forms, on
+    * (user_id, ts, event_id, code) chunked by [[withChunk]]. */
+  private def seqPatternFromChunks(events: DataFrame,
+                                   rowsPerChunk: Option[Long]): DataFrame = {
+    val chunkStr = withChunk(events
+      .select(col("user_id"), col("ts"), col("event_id"),
+        seqCode(col("event_type")).as("code"),
+        unix_micros(col("ts")).as("us")), rowsPerChunk).drop("us")
       .groupBy("user_id", "chunk")
       .agg(array_join(transform(
         sort_array(collect_list(struct(col("ts"), col("event_id"),
@@ -3460,7 +3289,7 @@ object Advanced {
     * current row. The q40 as-of join is the read side of exactly this
     * table.
     *
-    * Routed by MEASURED skew ([[routeBySkew]], VERDICT r10 #1): even
+    * Routed by MEASURED skew ([[routeChunked]], VERDICT r10 #1): even
     * keys run [[scd2]] (ONE user-keyed exchange serving all three
     * windows), a Zipf-hot key runs [[scd2Chunked]] (the q158 template
     * — the r10 skew2 stress measured the plain per-user lag+rank+lead
@@ -3534,13 +3363,7 @@ object Advanced {
     * scaladoc for the three chunked windows. Bit-exact vs [[scd2]]
     * (pinned in AdvancedSpec across midnight-crossing runs and
     * change-less days). */
-  def scd2Chunked(events: DataFrame): DataFrame = {
-    val chunkUs = 86400000000L // one event-time day per chunk (q158)
-    scd2FromChunks(events
-      .select(col("user_id"), col("event_type").as("state"),
-        col("ts"), col("event_id"),
-        floor(unix_micros(col("ts")) / chunkUs).as("chunk")))
-  }
+  def scd2Chunked(events: DataFrame): DataFrame = scd2FromChunks(events, None)
 
   /** The q155 plan, COUNT-CHUNKED — the single-day-flood escalation
     * tier (SKEW_r12_dayflood: the flood day collapses the day-chunk
@@ -3549,22 +3372,17 @@ object Advanced {
     * ANY time distribution). Same three-window stitch algebra as
     * [[scd2Chunked]]. */
   def scd2CountChunked(events: DataFrame,
-                       rowsPerChunk: Long = 262144L): DataFrame = {
-    val ranked = RangeStitch.withRangeRank(
-      events.select(col("user_id"), col("event_type").as("state"),
-        col("ts"), col("event_id"))
-        .withColumn("us", unix_micros(col("ts"))),
-      "user_id", Seq("us", "event_id"), "rk")
-    scd2FromChunks(ranked
-      .withColumn("chunk", floor((col("rk") - 1) / rowsPerChunk))
-      .select("user_id", "state", "ts", "event_id", "chunk"))
-  }
+                       rowsPerChunk: Long = RowsPerChunk): DataFrame =
+    scd2FromChunks(events, Some(rowsPerChunk))
 
-  /** Shared three-window stitch body of the two chunked SCD2 forms:
-    * expects (user_id, state, ts, event_id, chunk) where chunks
-    * partition each user's (ts, event_id)-ordered timeline into
-    * consecutive groups. */
-  private def scd2FromChunks(ev: DataFrame): DataFrame = {
+  /** Shared three-window stitch body of the two chunked SCD2 forms, on
+    * (user_id, state, ts, event_id) chunked by [[withChunk]]. */
+  private def scd2FromChunks(events: DataFrame,
+                             rowsPerChunk: Option[Long]): DataFrame = {
+    val ev = withChunk(events
+      .select(col("user_id"), col("event_type").as("state"),
+        col("ts"), col("event_id"), unix_micros(col("ts")).as("us")),
+      rowsPerChunk).drop("us")
     val w2 = Window.partitionBy("user_id", "chunk").orderBy("ts", "event_id")
     val wChunks = Window.partitionBy("user_id").orderBy("chunk")
     // q107's union boundary stitch: the previous ACTIVE day's last

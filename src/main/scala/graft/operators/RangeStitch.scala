@@ -104,38 +104,54 @@ object RangeStitch {
       .drop("pid", "seq", "lcum", "off")
   }
 
-  /** Estimated row count of the hottest `key` value, from a
-    * deterministic hash sample over struct(key, idCol) (idCol must vary
-    * per row for the sample to be uniform — pass the table's unique
-    * id). One scan + a map-side-combined count; the driver reads ONE
-    * row. The routing probe for this object's operators — same
-    * mechanism as [[Advanced.hottestKeyRows]]. */
-  def hottestKeyRows(df: DataFrame, key: String, idCol: String,
+  /** Estimated row count of the hottest `keys` group, from a
+    * deterministic hash sample (no rand(): reproducible across runs and
+    * task retries) over struct(`sample`...). One scan-local filter + a
+    * map-side-combined count; the driver reads ONE row (the max).
+    * `sampleMod` keeps 1-in-`sampleMod` rows.
+    *
+    * Contract (ADVICE r10, VERDICT r11 #4): the sampled columns must
+    * vary per row within a group for the sample to be unbiased. A
+    * group whose rows are byte-identical on every sampled column falls
+    * in ONE hash bucket, so its estimate is all-or-nothing (0 or
+    * count × sampleMod). Pass the table's unique id among them; the
+    * events family hashes (user_id, event_id, ts), so an event_id
+    * repeated ACROSS users is harmless.
+    *
+    * This is an EAGER action that re-evaluates the full input lineage:
+    * route through [[hottestKeyRowsCached]] (a `probeCacheKey`) when
+    * several operators probe the same table. */
+  def hottestKeyRows(df: DataFrame, keys: Seq[Column], sample: Seq[Column],
                      sampleMod: Int = 100): Long = {
     val est = df
-      .where(pmod(hash(struct(col(key), col(idCol))),
-        lit(sampleMod)) === 0)
-      .groupBy(key).count()
+      .where(pmod(hash(struct(sample: _*)), lit(sampleMod)) === 0)
+      .groupBy(keys: _*).count()
       .agg(max("count")).first()
     if (est.isNullAt(0)) 0L else est.getLong(0) * sampleMod
   }
 
-  /** Process-wide probe memo keyed by caller-chosen key + the probed
-    * key column + the id column — registry queries over the same
-    * fixture pay ONE probe scan per (table, key column) per JVM. idCol
-    * is part of the key (ADVICE r11) because it is the only in-API
-    * distinguisher of WHICH table was probed: two different tables
-    * under one fixture-dir cacheKey with a same-named key column (e.g.
-    * both carrying `lang`) must not share an estimate — mirrors how
-    * [[Advanced.hottestUserDayRowsCached]] suffixes its key. */
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String, Int), java.lang.Long]()
+  /** Process-wide probe memo, keyed by (caller-chosen cacheKey, probed
+    * keys, sampled columns, sampleMod). The registry passes the fixture
+    * dir as cacheKey, so a batch of routed queries over one table pays
+    * ONE probe scan per probed grouping per JVM (VERDICT r10 #1). An
+    * explicit key rather than plan identity: two `spark.read.parquet`
+    * calls build distinct file indexes, so plan equality would never
+    * hit. The keys and sampled columns are part of the memo key (ADVICE
+    * r11): `lang` and `source` probes of one documents table, or the
+    * per-user and per-(user, day) probes of one events table, share a
+    * cacheKey and must not share an estimate. Callers mutating a table
+    * in place mid-JVM must use a fresh cacheKey (fixture dirs are
+    * immutable). */
+  private val probeMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[String], Seq[String], Int), java.lang.Long]()
 
   /** [[hottestKeyRows]] through the process-wide memo. */
-  def hottestKeyRowsCached(df: DataFrame, key: String, idCol: String,
-                           cacheKey: String, sampleMod: Int = 100): Long =
-    probeCache.computeIfAbsent((cacheKey, key, idCol, sampleMod),
-      _ => java.lang.Long.valueOf(hottestKeyRows(df, key, idCol, sampleMod)))
+  def hottestKeyRowsCached(df: DataFrame, keys: Seq[Column],
+                           sample: Seq[Column], cacheKey: String,
+                           sampleMod: Int = 100): Long =
+    probeMemo.computeIfAbsent(
+      (cacheKey, keys.map(_.toString), sample.map(_.toString), sampleMod),
+      _ => java.lang.Long.valueOf(hottestKeyRows(df, keys, sample, sampleMod)))
       .longValue()
 
   /** Measured crossover for THIS kernel (CROSSOVER_r11_rank.json: hot
@@ -144,25 +160,31 @@ object RangeStitch {
     * 6.98 s, max task 1.14/1.69/3.26/6.29) while the range plan is flat
     * bookkeeping (walls 3.3–4.3 s, max task ~1.0–1.3 s throughout) —
     * walls cross EXACTLY at 2M, where the range plan's max task is
-    * already 2.5× better. 2M is therefore the routing default (the
-    * events family's 2.5M is the same measurement made on sessionize;
-    * this kernel's own ladder sits a touch lower). */
+    * already 2.5× better. 2M is therefore the documents default and the
+    * events family's per-(user, day) escalation default
+    * ([[Advanced.defaultHotKeyRowThreshold]], 2.5M, is the same
+    * measurement made on sessionize; this kernel's ladder sits lower). */
   val defaultHotKeyRowThreshold: Long = 2000000L
 
-  /** Route a dense-window builder vs its range-stitch twin by measured
-    * key skew ([[Advanced.routeBySkew]]'s shape, generalized to any
-    * key column). Threshold default is [[defaultHotKeyRowThreshold]],
-    * this kernel's own measured crossover. */
-  def routeBySkew(df: DataFrame, key: String, idCol: String,
-                  dense: DataFrame => DataFrame,
-                  ranged: DataFrame => DataFrame,
-                  hotKeyRowThreshold: Long = defaultHotKeyRowThreshold,
+  /** The one skew router: probe the hottest `keys` group of `df` (hash
+    * sample over `sample`, memoized under `probeCacheKey` when given)
+    * and build `skewed` at or above `threshold`, else `dense`. Only the
+    * chosen plan is built — both are by-name, so a count-chunk
+    * checkpoint or a nested probe runs only on its own branch. Every
+    * routed pair produces IDENTICAL rows (parity pinned in AdvancedSpec,
+    * TextPipelineSpec and `graft.ChunkedParity`), so the switch changes
+    * only the physical plan, never results. The events family nests two
+    * calls (per user, then per (user, day)); the documents family
+    * routes its per-source and per-lang windows through one. */
+  def routeBySkew(df: DataFrame, keys: Seq[Column], sample: Seq[Column],
+                  threshold: Long = defaultHotKeyRowThreshold,
                   sampleMod: Int = 100,
-                  probeCacheKey: Option[String] = None): DataFrame = {
+                  probeCacheKey: Option[String] = None)(
+                   dense: => DataFrame, skewed: => DataFrame): DataFrame = {
     val hot = probeCacheKey match {
-      case Some(k) => hottestKeyRowsCached(df, key, idCol, k, sampleMod)
-      case None    => hottestKeyRows(df, key, idCol, sampleMod)
+      case Some(k) => hottestKeyRowsCached(df, keys, sample, k, sampleMod)
+      case None    => hottestKeyRows(df, keys, sample, sampleMod)
     }
-    if (hot >= hotKeyRowThreshold) ranged(df) else dense(df)
+    if (hot >= threshold) skewed else dense
   }
 }

@@ -1032,6 +1032,17 @@ object TextPipeline {
       .orderBy(col("n_docs").desc, col("n_total").desc, col("shingle"))
   }
 
+  /** The per-lang window routing of q56 and q80: the hottest `lang` of
+    * the fixture's documents picks the dense window or its RangeStitch
+    * form ([[RangeStitch.routeBySkew]] at the kernel's 2M crossover).
+    * The probe runs on the pruned (doc_id, lang) projection, so it never
+    * pays the tokenizer or polyHash, and is memoized per fixture dir. */
+  private def routeByLang(s: SparkSession, d: String)(
+      dense: => DataFrame, ranged: => DataFrame): DataFrame =
+    RangeStitch.routeBySkew(Tables.documents(s, d).select("doc_id", "lang"),
+      Seq(col("lang")), Seq(col("lang"), col("doc_id")),
+      probeCacheKey = Some(d))(dense, ranged)
+
   /** q56: token-budget shard packing — assign each doc (per lang, in
     * doc_id order) to the training shard its running token count starts
     * in. The sequence-packing step of a training-data pipeline as a
@@ -1063,17 +1074,12 @@ object TextPipeline {
     val base = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
         size(wordsCol).cast("long").as("n_tok"))
-    val hot = RangeStitch.hottestKeyRowsCached(
-      Tables.documents(s, d).select("doc_id", "lang"), "lang", "doc_id", d)
-    val cum =
-      if (hot >= RangeStitch.defaultHotKeyRowThreshold)
-        RangeStitch.withRangePrefixSum(base, "lang", Seq("doc_id"),
-          "n_tok", "cum")
-      else {
-        val w = Window.partitionBy("lang").orderBy("doc_id")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        base.withColumn("cum", sum("n_tok").over(w))
-      }
+    val w = Window.partitionBy("lang").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val cum = routeByLang(s, d)(
+      base.withColumn("cum", sum("n_tok").over(w)),
+      RangeStitch.withRangePrefixSum(base, "lang", Seq("doc_id"),
+        "n_tok", "cum"))
     cum
       .select(col("doc_id"), col("lang"), col("n_tok"),
         floor((col("cum") - col("n_tok")) / lit(500.0)).cast("long").as("shard"))
@@ -1711,18 +1717,15 @@ object TextPipeline {
     val h = Tables.documents(s, d)
       .select(col("lang"), col("doc_id"),
         Text.polyHash(col("text"), 17L).as("hk"))
-    val hot = RangeStitch.hottestKeyRowsCached(
-      Tables.documents(s, d).select("doc_id", "lang"), "lang", "doc_id", d)
-    val ranked =
-      if (hot >= RangeStitch.defaultHotKeyRowThreshold) {
+    val byLang = Window.partitionBy("lang")
+    val ranked = routeByLang(s, d)(
+      h.withColumn("rn",
+          row_number().over(byLang.orderBy("hk", "doc_id")).cast("long"))
+        .withColumn("total", count(lit(1)).over(byLang)), {
         val rk = RangeStitch.withRangeRank(h, "lang", Seq("hk", "doc_id"),
           "rn")
         rk.join(rk.groupBy("lang").agg(count(lit(1)).as("total")), Seq("lang"))
-      } else {
-        val w = Window.partitionBy("lang").orderBy("hk", "doc_id")
-        h.withColumn("rn", row_number().over(w).cast("long"))
-          .withColumn("total", count(lit(1)).over(Window.partitionBy("lang")))
-      }
+      })
     ranked
       .where(col("rn") <= ceil(col("total") *
         when(col("lang") === "en", 0.5).otherwise(0.25)))
@@ -3213,14 +3216,10 @@ object TextPipeline {
   def sourceLengthRanksRange(docs: DataFrame): DataFrame =
     RangeStitch.withRangeRank(docs, "source", Seq("n_chars", "doc_id"))
 
-  /** Estimated row count of the hottest SOURCE —
-    * [[RangeStitch.hottestKeyRows]] probing `source` (doc_id keeps the
-    * hash sample per-row uniform). */
-  def hottestSourceRows(docs: DataFrame, sampleMod: Int = 100): Long =
-    RangeStitch.hottestKeyRows(docs, "source", "doc_id", sampleMod)
-
   /** [[sourceLengthRanks]] vs [[sourceLengthRanksRange]] by measured
-    * source skew — [[RangeStitch.routeBySkew]] on the documents axis;
+    * source skew — [[RangeStitch.routeBySkew]] on the documents axis
+    * (the sample hashes (source, doc_id): doc_id keeps it per-row
+    * uniform);
     * q135/q141/q144 route through this with the fixture dir as
     * `probeCacheKey` (ONE probe scan per corpus per JVM). Both plans
     * produce identical rows (unique sort key ⇒ one valid rank
@@ -3231,9 +3230,9 @@ object TextPipeline {
                               RangeStitch.defaultHotKeyRowThreshold,
                             sampleMod: Int = 100,
                             probeCacheKey: Option[String] = None): DataFrame =
-    RangeStitch.routeBySkew(docs, "source", "doc_id",
-      sourceLengthRanks, sourceLengthRanksRange,
-      hotSourceRowThreshold, sampleMod, probeCacheKey)
+    RangeStitch.routeBySkew(docs, Seq(col("source")),
+      Seq(col("source"), col("doc_id")), hotSourceRowThreshold, sampleMod,
+      probeCacheKey)(sourceLengthRanks(docs), sourceLengthRanksRange(docs))
 
   /** q135: quantile normalization across sources — the microarray-
     * normalization classic applied to corpus curation: force every

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.functions.TopK
-import graft.operators.Advanced
+import graft.operators.{Advanced, RangeStitch}
 
 class AdvancedSpec extends SparkSpec {
 
@@ -331,8 +331,8 @@ class AdvancedSpec extends SparkSpec {
     val sk = skewed.toDF("user_id", "event_id", "ts")
     val un = uniform.toDF("user_id", "event_id", "ts")
     // sampleMod=1 keeps every row -> the probe is exact, no variance
-    assert(Advanced.hottestKeyRows(sk, sampleMod = 1) == 30L)
-    assert(Advanced.hottestKeyRows(un, sampleMod = 1) == 2L)
+    assert(hotUser(sk, 1) == 30L)
+    assert(hotUser(un, 1) == 2L)
     val autoSk = Advanced.sessionizeAuto(sk, hotKeyRowThreshold = 10,
       sampleMod = 1)
     val autoUn = Advanced.sessionizeAuto(un, hotKeyRowThreshold = 10,
@@ -346,7 +346,7 @@ class AdvancedSpec extends SparkSpec {
     // empty input: probe returns 0, dense plan, no NPE
     val empty = Seq.empty[(Long, Long, Timestamp)]
       .toDF("user_id", "event_id", "ts")
-    assert(Advanced.hottestKeyRows(empty, sampleMod = 1) == 0L)
+    assert(hotUser(empty, 1) == 0L)
     assert(Advanced.sessionizeAuto(empty).collect().isEmpty)
   }
 
@@ -391,8 +391,8 @@ class AdvancedSpec extends SparkSpec {
       (1L, i.toLong, t(f"2024-03-${i}%02d 10:00:00"))) :+
       (2L, 100L, t("2024-04-05 09:00:00")))
       .toDF("user_id", "event_id", "ts")
-    assert(Advanced.hottestUserDayRows(flood, sampleMod = 1) == 30L)
-    assert(Advanced.hottestUserDayRows(spread, sampleMod = 1) == 1L)
+    assert(hotUserDay(flood, 1) == 30L)
+    assert(hotUserDay(spread, 1) == 1L)
     val autoSpread = Advanced.sessionizeAuto(spread, hotKeyRowThreshold = 10,
       sampleMod = 1)
     // tier 2: chunk attribute present, no checkpoint LogicalRDD
@@ -464,6 +464,14 @@ class AdvancedSpec extends SparkSpec {
     dir
   }
   private def t(s: String) = Timestamp.valueOf(s)
+
+  /** The events family's two skew probes, as the routers run them. */
+  private def hotUser(ev: org.apache.spark.sql.DataFrame, sampleMod: Int) =
+    RangeStitch.hottestKeyRows(ev, Advanced.perUser, Advanced.eventSample,
+      sampleMod)
+  private def hotUserDay(ev: org.apache.spark.sql.DataFrame, sampleMod: Int) =
+    RangeStitch.hottestKeyRows(ev, Advanced.perUserDay, Advanced.eventSample,
+      sampleMod)
 
   test("q107 chunk stitch: boundary src from previous ACTIVE day; " +
     "first-ever event filtered; == dense lag on the fixture") {
@@ -862,13 +870,14 @@ class AdvancedSpec extends SparkSpec {
     val evSk = Tables.events(spark, eventsDir(skewed))
     val evUn = Tables.events(spark, eventsDir(uniform))
     val key = s"probe-cache-test-${System.nanoTime()}"
-    assert(Advanced.hottestKeyRowsCached(evSk, key, sampleMod = 1) == 25L)
+    def cached(ev: DataFrame, k: String) = RangeStitch.hottestKeyRowsCached(
+      ev, Advanced.perUser, Advanced.eventSample, k, sampleMod = 1)
+    assert(cached(evSk, key) == 25L)
     // same key, DIFFERENT frame: the memo answers without scanning,
     // so the (stale-by-design) skewed estimate comes back
-    assert(Advanced.hottestKeyRowsCached(evUn, key, sampleMod = 1) == 25L)
+    assert(cached(evUn, key) == 25L)
     // a fresh key re-probes
-    assert(Advanced.hottestKeyRowsCached(evUn, key + "-2", sampleMod = 1)
-      == 1L)
+    assert(cached(evUn, key + "-2") == 1L)
   }
 
   test("count-chunked == dense for the six escalated twins (r12 flood " +
@@ -908,16 +917,16 @@ class AdvancedSpec extends SparkSpec {
       (1L, i.toLong, t(f"2024-03-01 10:${i % 60}%02d:00")),
       (2L, i.toLong, t(f"2024-03-01 11:${i % 60}%02d:00"))))
       .toDF("user_id", "event_id", "ts")
-    assert(Advanced.hottestKeyRows(dup, sampleMod = 1) == 20L)
+    assert(hotUser(dup, 1) == 20L)
     // degenerate case the scaladoc warns about: one user's rows all
     // byte-identical on (event_id, ts) -> ONE hash bucket, so a sampled
     // probe is all-or-nothing for that user (0 or count*sampleMod),
     // never a fractional estimate
     val ident = (1 to 16).map(_ => (1L, 7L, t("2024-03-01 10:00:00")))
       .toDF("user_id", "event_id", "ts")
-    val est = Advanced.hottestKeyRows(ident, sampleMod = 4)
+    val est = hotUser(ident, 4)
     assert(est == 0L || est == 64L, s"expected all-or-nothing, got $est")
     // sampleMod=1 (exact) is immune even to the degenerate shape
-    assert(Advanced.hottestKeyRows(ident, sampleMod = 1) == 16L)
+    assert(hotUser(ident, 1) == 16L)
   }
 }

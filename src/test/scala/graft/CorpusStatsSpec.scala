@@ -169,6 +169,21 @@ class CorpusStatsSpec extends SparkSpec {
     (1 to dim).foreach(i => assert(got((i, i)) >= 0.0))
   }
 
+  test("q128 over an empty embeddings table returns 0 rows (ADVICE r12)") {
+    // the aggregated Gram state has no dimensions; sequence(1, 0) would
+    // count DOWN and index element_at at 0, so the query must filter
+    // the state row out before the fan-out
+    val dir = java.nio.file.Files.createTempDirectory("emptyemb").toString
+    try {
+      Tables.embeddings(spark, sf0001).limit(0)
+        .write.parquet(s"$dir/embeddings.parquet")
+      assert(SparkEntry.queries("q128_embed_cov")(spark, dir)
+        .collect().isEmpty)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
   test("q122: matrix cells partition q26's pairs by their source pair") {
     val srcOf = docs.map(d => d._1 -> d._2).toMap
     val q26 = SparkEntry.queries("q26_neardup_jaccard")(spark, sf0001)

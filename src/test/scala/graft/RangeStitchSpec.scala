@@ -92,7 +92,34 @@ class RangeStitchSpec extends SparkSpec {
       .collect().isEmpty)
     assert(RangeStitch.withRangePrefixSum(empty, "key", Seq("id"), "v", "c")
       .collect().isEmpty)
-    assert(RangeStitch.hottestKeyRows(empty, "key", "id", 1) == 0L)
+    assert(RangeStitch.hottestKeyRows(empty, Seq(col("key")),
+      Seq(col("key"), col("id")), 1) == 0L)
+  }
+
+  test("probe memo: different probed keys under one cacheKey never " +
+    "share an estimate (ADVICE r11 collision case)") {
+    import java.sql.Timestamp
+    import spark.implicits._
+    import graft.operators.Advanced
+    val key = s"memo-keys-test-${System.nanoTime()}"
+    // documents: the hottest lang owns 8 rows, the hottest source 3
+    val docs = (1 to 12).map(i => (i.toLong,
+      if (i <= 8) "en" else "de", s"s${i % 4}"))
+      .toDF("doc_id", "lang", "source")
+    def docProbe(k: String) = RangeStitch.hottestKeyRowsCached(docs,
+      Seq(col(k)), Seq(col(k), col("doc_id")), key, sampleMod = 1)
+    assert(docProbe("lang") == 8L)
+    assert(docProbe("source") == 3L)
+    // events: user 1 owns 10 rows, 2 per day over 5 days — the per-user
+    // and per-(user, day) probes of ONE frame under ONE cacheKey
+    val ev = (1 to 10).map(i => (1L, i.toLong,
+      Timestamp.valueOf(f"2024-03-0${1 + i % 5}%d 10:${i}%02d:00")))
+      .toDF("user_id", "event_id", "ts")
+    def evProbe(keys: Seq[org.apache.spark.sql.Column]) =
+      RangeStitch.hottestKeyRowsCached(ev, keys, Advanced.eventSample, key,
+        sampleMod = 1)
+    assert(evProbe(Advanced.perUser) == 10L)
+    assert(evProbe(Advanced.perUserDay) == 2L)
   }
 
   test("Checkpoints.cut reliable knob: checkpoint-dir cuts produce the " +

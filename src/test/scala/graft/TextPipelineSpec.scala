@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.operators.TextPipeline
+import graft.operators.{RangeStitch, TextPipeline}
 
 /** Dedup-family operators: exact Jaccard ground truth, and the MinHash-
   * LSH scale path validated against it (candidate pairs are verified, so
@@ -342,8 +342,11 @@ class TextPipelineSpec extends SparkSpec {
       (s * 10L, s"s$s", 3L), (s * 10L + 1, s"s$s", 4L)))
       .toDF("doc_id", "source", "n_chars")
     // sampleMod=1 keeps every row -> the probe is exact, no variance
-    assert(TextPipeline.hottestSourceRows(skewed, sampleMod = 1) == 30L)
-    assert(TextPipeline.hottestSourceRows(uniform, sampleMod = 1) == 2L)
+    def hotSource(docs: org.apache.spark.sql.DataFrame) =
+      RangeStitch.hottestKeyRows(docs, Seq(col("source")),
+        Seq(col("source"), col("doc_id")), sampleMod = 1)
+    assert(hotSource(skewed) == 30L)
+    assert(hotSource(uniform) == 2L)
     val autoSk = TextPipeline.sourceLengthRanksAuto(skewed,
       hotSourceRowThreshold = 10, sampleMod = 1)
     val autoUn = TextPipeline.sourceLengthRanksAuto(uniform,
@@ -363,7 +366,7 @@ class TextPipelineSpec extends SparkSpec {
     // empty input: probe returns 0, dense plan, no NPE
     val empty = Seq.empty[(Long, String, Long)]
       .toDF("doc_id", "source", "n_chars")
-    assert(TextPipeline.hottestSourceRows(empty, sampleMod = 1) == 0L)
+    assert(hotSource(empty) == 0L)
     assert(TextPipeline.sourceLengthRanksAuto(empty).collect().isEmpty)
   }
 }

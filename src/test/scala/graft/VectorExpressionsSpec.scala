@@ -366,6 +366,21 @@ class VectorExpressionsSpec extends SparkSpec {
     neu.zip(old).foreach { case (a, b) => assert(a == b, s"$a vs $b") }
   }
 
+  test("GramMatrix.merge: an n>0 buffer with empty sums and a real " +
+    "buffer fail the ragged-dimension check (ADVICE r12)") {
+    import graft.functions.{GramMatrix, GramState}
+    val g = new GramMatrix
+    // a partition whose rows were all zero-length vectors
+    val zeroDim = g.reduce(g.zero, Seq.empty[Double])
+    assert(zeroDim.n == 1L && zeroDim.s.isEmpty)
+    def real = g.reduce(g.zero, Seq(1.0, 2.0))
+    intercept[IllegalArgumentException](g.merge(zeroDim, real))
+    intercept[IllegalArgumentException](g.merge(real, zeroDim))
+    // the n == 0 zero stays the additive identity on both sides
+    assert(g.merge(g.zero, real).s.toSeq == Seq(1.0, 2.0))
+    assert(g.merge(real, GramState(0L, Array.empty, Array.empty)).n == 1L)
+  }
+
   test("sorted_intersect_count == size(array_intersect) on sorted " +
     "distinct string sets (r12 q100/q114 verify rewrite)") {
     import graft.expressions.VectorExpressions.sortedIntersectCount

@@ -3,6 +3,11 @@
 # sf0.01 of (a) graft.Verify + oracle for the ten routed registry
 # queries (dense route on the uniform fixture) and (b) graft.ChunkedParity
 # for all nine dense/chunked pairs (the union-boundary forms).
+# The report goes to stdout and to $OUT/report.txt (a fresh temp dir,
+# also holding the Verify dump); the committed
+# CORRECTNESS_r11_localcluster.txt is the round-11 record and is not
+# rewritten. SPARK_GRAFT_CPUS keeps graft.Harness's default (this
+# machine's core count) unless set by the caller.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${SF_DIR:-/root/testdata/sf0.01}"
@@ -31,9 +36,10 @@ JAVA=(env SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13
 OUT="$(mktemp -d /tmp/lc_r11.XXXXXX)"
 {
   echo "== routed registry queries, graft.Verify + DuckDB oracle, $SF, local-cluster[2,8,2048] =="
-  SPARK_GRAFT_CPUS=16 "${JAVA[@]}" graft.Verify "$SF" "$OUT" "${ROUTED[@]}" >/dev/null
+  "${JAVA[@]}" graft.Verify "$SF" "$OUT" "${ROUTED[@]}" >/dev/null
   python3 tools/oracle_check.py "$SF" "$OUT" "${ROUTED[@]}"
   echo
   echo "== dense vs chunked parity (union-boundary forms), graft.ChunkedParity, $SF, local-cluster[2,8,2048] =="
-  SPARK_GRAFT_CPUS=16 "${JAVA[@]}" graft.ChunkedParity "$SF"
-} | tee "CORRECTNESS_r11_localcluster.txt"
+  "${JAVA[@]}" graft.ChunkedParity "$SF"
+} | tee "$OUT/report.txt"
+echo "report: $OUT/report.txt" >&2

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: formatted physical plans, in two modes.
@@ -61,6 +62,33 @@ object PlanDump {
     "q115_rolling_median" -> "measured-skew routed (r11; this uniform fixture takes the DENSE plan: one per-user frame window, ≤7-element frames scan-local). The chunked skew twin (within-day frame + incoming-tail carry fold) is rollingMedianChunked with its own 4-exchange budget",
     "q100_setsim_join" -> "r11 checkpointed PPJoin: the doc-set table (collect_set dedup, one doc-keyed exchange) materializes at a localCheckpoint cut consumed by the freq/prefix stream AND both verify sides; verification is a scan-local native sorted_intersect_count over the joined candidate pair (r12 — the sets are sort_array'd, so |A∩B| is a two-pointer merge, no per-pair hash set) — post-checkpoint the plan is freq agg + candidate sh-join + orderBy")
 
+  /** `name`'s formatted physical plan, in [[canonical]] form. */
+  def formatted(spark: SparkSession, sfDir: String, name: String): String =
+    canonical(SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(ExplainMode.fromString("formatted")).trim)
+
+  /** A plan text with everything that depends on the JVM run rather than
+    * on the plan taken out, so dumps of identical code compare equal:
+    * expression ids (`#N`), higher-order-function lambda variables
+    * (`x_N`, `y_N`) and RDD ids (`RDD[N]`) are renumbered by first
+    * appearance; identity hashes (`TopKPairs@1b2c3d`,
+    * `$Lambda$2660/0x...@2688b2be`), `plan_id`s and the source line of
+    * RDD call sites (`localCheckpoint at Advanced.scala:2715`) are
+    * dropped. */
+  def canonical(text: String): String = {
+    val stripped = text
+      .replaceAll("""\$Lambda(\$\d+)?(/0x[0-9a-f]+)?""", "\\$Lambda")
+      .replaceAll("""(?<=[\w$])@[0-9a-f]{1,8}\b""", "")
+      .replaceAll("""\[plan_id=\d+\]""", "[plan_id]")
+      .replaceAll("""(\.scala):\d+""", "$1")
+    Seq("""(#)(\d+)""".r, """(lambda [A-Za-z]+_)(\d+)""".r, """(RDD\[)(\d+)""".r)
+      .foldLeft(stripped) { (t, re) =>
+        val ids = scala.collection.mutable.Map.empty[String, Int]
+        re.replaceAllIn(t, m => scala.util.matching.Regex.quoteReplacement(
+          m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+      }
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.isEmpty || args.length >= 3,
       "usage: PlanDump | PlanDump <outDir> <suffix> <query...>")
@@ -71,9 +99,7 @@ object PlanDump {
       .config("spark.sql.shuffle.partitions", "4")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    def formatted(name: String): String =
-      SparkEntry.queries(name)(spark, sfDir).queryExecution
-        .explainString(ExplainMode.fromString("formatted")).trim
+    def formatted(name: String): String = PlanDump.formatted(spark, sfDir, name)
 
     if (args.nonEmpty) {
       val outDir = Paths.get(args(0))

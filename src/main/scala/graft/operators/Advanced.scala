@@ -1653,12 +1653,18 @@ object Advanced {
     // min/max render via cast AFTER the aggregate, mirroring the
     // declared SQL's CAST(MIN(..) AS BIGINT) order exactly; l_partkey
     // through double is exact below 2^53.
+    // Each branch also carries one weightless (w = NULL) null-valued row
+    // per column, so every col_name keeps a group on an empty lineitem
+    // and emits the SQL text's global-aggregate row (n_rows = n_null =
+    // ndv = 0, NULL min/max); on data it only adds 0 to the null count.
     val li = Tables.lineitem(s, d)
     def branch(cols: Seq[(String, Column)]): DataFrame =
-      cols.map { case (n, v) => li.select(lit(n).as("cn"), v.as("v")) }
+      cols.map { case (n, v) => li.select(lit(n).as("cn"), v.as("v"), lit(1).as("w")) }
         .reduce(_ unionAll _)
+        .unionAll(s.range(1).select(explode(array(cols.map(c => lit(c._1)): _*)).as("cn"),
+          lit(null).as("v"), lit(null).cast("int").as("w")))
     def prof(vals: DataFrame, render: Column => Column): DataFrame =
-      vals.groupBy("cn", "v").agg(count(lit(1)).as("cnt"))
+      vals.groupBy("cn", "v").agg(count(col("w")).as("cnt"))
         .groupBy("cn").agg(
           sum("cnt").as("n_rows"),
           coalesce(sum(when(col("v").isNull, col("cnt"))), lit(0L)).as("n_null"),

@@ -52,7 +52,7 @@ object Layout {
     * (band, bsig) index is `bucketCols = Seq("bkey")` with
     * `bkey = functions.hash(band, bsig)` in `df` and
     * `sortCols = Seq("band", "bsig")` for row-group stats — the layout
-    * DocDedup/EmbDedup ingestEpoch writes for new tables. */
+    * the streaming survivor index writes (`streaming.SurvivorIndex`). */
   def appendEpochBucketed(df: DataFrame, table: String, buckets: Int,
                           epochId: Long, bucketCols: Seq[String],
                           sortCols: Seq[String] = Seq.empty): Unit = {

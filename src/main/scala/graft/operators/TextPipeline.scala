@@ -422,23 +422,6 @@ object TextPipeline {
     smallPairs.union(starPairs).distinct()
   }
 
-  /** [[bucketGuardedCandidates]] for INCREMENTAL ingest: candidates
-    * touch only the `fresh` banded rows against the `standing` index
-    * (which already contains them — the guard metadata is computed over
-    * the current cumulative view, so cap behavior matches the batch
-    * pipeline on the same corpus). Shared by the streaming survivor
-    * indexes (`DocDedup.ingestEpoch` / `EmbDedup.ingestEpoch`).
-    *
-    * Every stage here hashes on (band, bsig): when the standing side is
-    * a table BUCKETED on those columns (`Layout.appendEpochBucketed`),
-    * the per-bucket metadata aggregate and the candidate join both read
-    * it Exchange-free and only the epoch-sized `fresh` side shuffles —
-    * the streaming mirror of q65's bucketed-standing-corpus posture
-    * (asserted in LayoutSpec). `pruneBuckets > 0` additionally prunes
-    * standing-side READS to the touched buckets via
-    * [[pruneToTouchedBuckets]] — worth it when epochs are tiny relative
-    * to the index (the driver-side key collect is bounded at
-    * `pruneBuckets + 1` rows by construction). */
   /** Prune the standing banded index to the buckets the fresh batch
     * actually touches: collect the batch's DISTINCT (band, bsig) keys —
     * bounded by construction via `limit(cap + 1)`, so the collect is
@@ -487,6 +470,23 @@ object TextPipeline {
     }
   }
 
+  /** [[bucketGuardedCandidates]] for INCREMENTAL ingest: candidates
+    * touch only the `fresh` banded rows against the `standing` index
+    * (which already contains them — the guard metadata is computed over
+    * the current cumulative view, so cap behavior matches the batch
+    * pipeline on the same corpus). The candidate stage of the streaming
+    * survivor index (`streaming.SurvivorIndex.ingestEpoch`).
+    *
+    * Every stage here hashes on (band, bsig): when the standing side is
+    * a table BUCKETED on those columns (`Layout.appendEpochBucketed`),
+    * the per-bucket metadata aggregate and the candidate join both read
+    * it Exchange-free and only the epoch-sized `fresh` side shuffles —
+    * the streaming mirror of q65's bucketed-standing-corpus posture
+    * (asserted in LayoutSpec). `pruneBuckets > 0` additionally prunes
+    * standing-side READS to the touched buckets via
+    * [[pruneToTouchedBuckets]] — worth it when epochs are tiny relative
+    * to the index (the driver-side key collect is bounded at
+    * `pruneBuckets + 1` rows by construction). */
   private[graft] def incrementalGuardedCandidates(standing: DataFrame,
       fresh: DataFrame, cap: Int, idCol: String = "doc_id",
       pruneBuckets: Int = 0): DataFrame = {
@@ -502,8 +502,8 @@ object TextPipeline {
     // the session must run with
     // spark.sql.requireAllClusterKeysForCoPartition=false (the public
     // planner knob for joining bucketed tables on a key subset;
-    // results are identical either way). DocDedup/EmbDedup ingestEpoch
-    // set/restore it around their actions; direct callers own it
+    // results are identical either way). SurvivorIndex.ingestEpoch
+    // sets/restores it around its actions; direct callers own it
     // (LayoutSpec pins both the pruning and the no-shuffle plan).
     val keyed = standing.columns.contains("bkey")
     val fr =

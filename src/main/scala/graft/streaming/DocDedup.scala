@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.operators.{Layout, TextPipeline}
+import graft.operators.TextPipeline
 
 /** Incremental (streaming) near-duplicate detection — the stream twin of
   * [[graft.operators.TextPipeline.dedupCorpus]]'s candidate stage, for
@@ -173,17 +173,11 @@ object DocDedup {
     *
     * Timer cost, engineered (the round-8 stage-isolating profile in
     * BASELINE_HISTORY.md measured naive re-arming at ~35% of ingest
-    * wall time): the armed target lives IN the value
-    * state (no listTimers() store scan per arrival), and targets are
-    * quantized UP to a `ttl/64` grid — the timer only moves when
-    * activity crosses a grid line, so a hot bucket pays one
-    * delete+register per grid crossing instead of three timer ops per
-    * batch. Quantizing UP keeps the contract one-sided: expiry never
-    * fires before `last activity + ttl` (the armed target is ≥ every
-    * quantized ideal it absorbed), at most `ttl/64` late — the dedup
-    * horizon is a superset of the declared ttl, never a subset. Forward-
-    * only still holds: a late-but-valid row's older ideal quantizes at
-    * or below the armed target and is a no-op. */
+    * wall time): the armed target lives IN the value state (no
+    * listTimers() store scan per arrival) and moves by
+    * [[SurvivorIndex.rearm]] — rounded up to a `ttl/64` grid, forward
+    * only — so the dedup horizon is a superset of the declared ttl,
+    * never a subset. */
   class TtlBucketProcessor(tau: Double, ttlMs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[(Int, String), BandRowTs, Match] {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -214,15 +208,10 @@ object DocDedup {
           if (est >= tau) out += Match(r.doc_id, curId, key._1, est)
         }
       }
-      val slack = math.max(1L, ttlMs / 64)
-      val ideal = sorted(sorted.length - 1).ts.getTime + ttlMs // ts-sorted max
-      val targetQ = ((ideal + slack - 1) / slack) * slack
       val armed = if (prev != null) prev.armed else 0L
-      if (targetQ > armed) {
-        if (armed > 0) getHandle.deleteTimer(armed)
-        getHandle.registerTimer(targetQ)
-        rep.update(BucketRepT(curId, curSig, targetQ))
-      }
+      val next = SurvivorIndex.rearm(getHandle, armed,
+        sorted(sorted.length - 1).ts.getTime, ttlMs) // ts-sorted max
+      if (next != armed) rep.update(BucketRepT(curId, curSig, next))
       out.result().iterator
     }
 
@@ -358,29 +347,10 @@ object DocDedup {
     probed.union(tokenless)
   }
 
-  /** Fold per-band [[Probe]] rows into one verdict per document:
-    * `keep = true` iff no representative matched at `jac >= tau`;
-    * dropped docs carry their best match (max jac, ties → min dup_of,
-    * jac rounded to 4 decimals before ranking — the q58 reproducibility
-    * protocol). A plain batch aggregation: every band row of a document
-    * is exploded from ONE input row, so they always share a micro-batch
-    * and the per-batch fold is complete — no cross-batch state. */
-  def foldVerdicts(probes: DataFrame, tau: Double): DataFrame = {
-    val best = probes
-      .where(col("dup_of") >= 0 && col("jac") >= tau)
-      .groupBy("doc_id")
-      .agg(max(struct(round(col("jac"), 4).as("jac"),
-        (-col("dup_of")).as("nd"))).as("b"))
-      .select(col("doc_id"), (-col("b.nd")).as("dup_of"), col("b.jac").as("jac"))
-    probes.select("doc_id").distinct()
-      .join(best, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_of").isNull.as("keep"),
-        col("dup_of"), col("jac"))
-  }
-
   /** Instant per-arrival keep/drop verdicts — GREEDY arrival dedup:
-    * [[probes]] folded per micro-batch by [[foldVerdicts]] into an
-    * epoch-keyed (replay-idempotent) parquet sink at `outDir/epoch=N`.
+    * [[probes]] folded per micro-batch by [[SurvivorIndex.foldVerdicts]]
+    * into an epoch-keyed (replay-idempotent) parquet sink at
+    * `outDir/epoch=N`.
     * A doc is DROPPED iff some stored bucket member (an earlier-arrived
     * doc, kept or itself dropped) matches it at exact Jaccard ≥ tau;
     * the verdict is emitted the moment the doc arrives and never
@@ -401,13 +371,10 @@ object DocDedup {
   def verdictQuery(docs: DataFrame, tau: Double, outDir: String,
                    checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    probes(docs).writeStream
-      .foreachBatch { (batch: Dataset[Probe], epochId: Long) =>
-        foldVerdicts(batch.toDF(), tau)
-          .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    SurvivorIndex.epochSink(probes(docs), checkpointDir) { (batch, epochId) =>
+      SurvivorIndex.foldVerdicts(batch, "doc_id", "jac", tau)
+        .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
+    }
 
   // ------------------------------------------------- survivor index
 
@@ -431,105 +398,36 @@ object DocDedup {
     * Per-epoch cost beyond the new batch: one scan of the standing
     * banded store and components over the cumulative PAIR set —
     * near-dup pairs, ≪ corpus. Pass `bandedTable` to keep the banded
-    * index as an epoch-partitioned table BUCKETED on (band, bsig)
-    * instead of plain parquet: the guard aggregate and candidate join
-    * then read the standing side Exchange-free and only the new batch
-    * shuffles (the q65 posture, asserted in LayoutSpec). */
+    * index as an epoch-partitioned table BUCKETED on `bkey` =
+    * hash(band, bsig) instead of plain parquet: the guard aggregate and
+    * candidate join then read the standing side Exchange-free and only
+    * the new batch shuffles (the q65 posture, asserted in LayoutSpec). */
   def ingestEpoch(batch: DataFrame, tau: Double, stateDir: String,
                   outDir: String, epochId: Long,
                   maxBucket: Int = TextPipeline.LshMaxBucket,
-                  bandedTable: Option[String] = None,
-                  indexBuckets: Int = 8,
-                  pruneStandingBuckets: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.persist()
-    b.select("doc_id")
-      .write.mode("overwrite").parquet(s"$stateDir/ids/epoch=$epochId")
-    // r13 (VERDICT r12 #2): word-set state is written SORTED so the
-    // per-candidate verify below can use the sorted two-pointer count
-    // kernel instead of array_intersect's per-PAIR hash-set build —
-    // the same swap the batch q100/q114 verify made in r12.
-    b.select(col("doc_id"),
-        sort_array(array_distinct(Text.wordsOf(col("text")))).as("words"))
-      .write.mode("overwrite").parquet(s"$stateDir/words/epoch=$epochId")
-    val bandedNew = bandedRows(b).select("doc_id", "band", "bsig")
-    bandedTable match {
-      case Some(t) =>
-        // new tables get the file-prunable keyed layout (bucketed on the
-        // single bkey column, sorted by (band, bsig) for row-group
-        // stats); tables created before round 7 keep their (band, bsig)
-        // bucket spec — insertInto must match the existing schema
-        val keyed = !spark.catalog.tableExists(t) ||
-          spark.table(t).columns.contains("bkey")
-        if (keyed)
-          Layout.appendEpochBucketed(
-            bandedNew.withColumn("bkey", hash(col("band"), col("bsig"))),
-            t, indexBuckets, epochId, Seq("bkey"), Seq("band", "bsig"))
-        else
-          Layout.appendEpochBucketed(bandedNew, t, indexBuckets, epochId,
-            Seq("band", "bsig"))
-      case None =>
-        bandedNew.write.mode("overwrite")
-          .parquet(s"$stateDir/banded/epoch=$epochId")
-    }
-    b.unpersist()
+                  bandedTable: Option[String] = None): Unit =
+    SurvivorIndex.ingestEpoch(survivorFeed(tau), batch, stateDir, outDir,
+      epochId, maxBucket, bandedTable)
 
-    val bandedAll = bandedTable.map(spark.table)
-      .getOrElse(spark.read.parquet(s"$stateDir/banded"))
-    val bandCols =
-      Seq("doc_id", "band", "bsig") ++
-        (if (bandedAll.columns.contains("bkey")) Seq("bkey") else Nil)
-    val allB = bandedAll.select(bandCols.head, bandCols.tail: _*)
-    val newB = bandedAll.where(col("epoch") === epochId)
-      .select(bandCols.head, bandCols.tail: _*)
-    // STATE-FORMAT CONTRACT (r13): words/epoch=* arrays are SORTED at
-    // write (above) — the sorted two-pointer verify reads them as-is.
-    // A read-side re-sort was measured and REJECTED: it re-sorts every
-    // standing doc's set per epoch while the verify only touches
-    // candidates (sf1dup 3-epoch total 21.8 s with the re-sort vs
-    // 19.9 s baseline, BENCH_r13_stream_epoch.json; `perfbench`'s
-    // docdedup-epochs workload times this path). State dirs written before r13 must
-    // be rebuilt (all tests/benches create state fresh per run).
-    val words = spark.read.parquet(s"$stateDir/words")
-      .select("doc_id", "words")
-    // subset-key co-partition knob: lets the bkey-bucketed standing
-    // table satisfy the (bkey, band, bsig) join distribution from its
-    // bucket spec — no standing shuffle; results identical either way.
-    // Set around OUR action only (the pairs write below plans and runs
-    // inside this scope), restored after.
-    val coKey = "spark.sql.requireAllClusterKeysForCoPartition"
-    val coPrev = spark.conf.getOption(coKey)
-    spark.conf.set(coKey, "false")
-    try {
-      TextPipeline.incrementalGuardedCandidates(allB, newB, maxBucket,
-          pruneBuckets = pruneStandingBuckets)
-        // exact verification of candidates only — minHashLshPairs' contract
-        .join(words.select(col("doc_id").as("a"), col("words").as("wa")), "a")
-        .join(words.select(col("doc_id").as("b"), col("words").as("wb")), "b")
-        // r13: sorted distinct word sets → native two-pointer |A∩B|
-        // (graft.expressions.VectorExpressions.sortedIntersectCount);
-        // same count array_intersect+size produced, no per-pair hash set
-        .withColumn("i",
-          graft.expressions.VectorExpressions
-            .sortedIntersectCount(col("wa"), col("wb")).cast("double"))
-        .where(col("i") / (size(col("wa")) + size(col("wb")) - col("i")) >= tau)
-        .select("a", "b")
-        .write.mode("overwrite").parquet(s"$stateDir/pairs/epoch=$epochId")
-    } finally coPrev match {
-      case Some(v) => spark.conf.set(coKey, v)
-      case None => spark.conf.unset(coKey)
-    }
-
-    // no pairs yet (the first epochs) gives empty labels, no losers
-    val losers = TextPipeline.connectedComponents(
-        spark.read.parquet(s"$stateDir/pairs").select("a", "b"))
-      .where(col("id") =!= col("rep"))
-      .select(col("id").as("doc_id"))
-    // un-hinted anti join: losers is O(duplicate count) — AQE broadcasts
-    // it when small, shuffles when a dup-heavy feed makes it O(corpus)
-    spark.read.parquet(s"$stateDir/ids").select("doc_id")
-      .join(losers, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
+  /** The document feed of the survivor index. Word sets are stored
+    * SORTED (state-format contract since r13) so the verify is the
+    * native two-pointer |A∩B| count
+    * ([[graft.expressions.VectorExpressions.sortedIntersectCount]]) —
+    * the same count array_intersect + size produced, without a per-pair
+    * hash set; the batch q100/q114 verify made the same swap in r12. A
+    * read-side re-sort was measured and REJECTED: it re-sorts every
+    * standing doc's set per epoch while the verify only touches
+    * candidates (sf1dup 3-epoch total 21.8 s with the re-sort vs 19.9 s
+    * baseline, BENCH_r13_stream_epoch.json), so state directories
+    * written before r13 must be rebuilt. */
+  private def survivorFeed(tau: Double): SurvivorIndex.Feed = {
+    val i = graft.expressions.VectorExpressions
+      .sortedIntersectCount(col("wa"), col("wb")).cast("double")
+    SurvivorIndex.Feed("doc_id", bandedRows(_), "words",
+      _.select(col("doc_id"),
+        sort_array(array_distinct(Text.wordsOf(col("text")))).as("words")),
+      Seq("words" -> "w"),
+      i / (size(col("wa")) + size(col("wb")) - i) >= tau)
   }
 
   /** Streaming SURVIVOR-INDEX maintenance — the stream form of
@@ -549,15 +447,9 @@ object DocDedup {
   def survivorQuery(docs: DataFrame, tau: Double, stateDir: String,
                     outDir: String, checkpointDir: String,
                     maxBucket: Int = TextPipeline.LshMaxBucket,
-                    bandedTable: Option[String] = None,
-                    indexBuckets: Int = 8,
-                    pruneStandingBuckets: Int = 0)
+                    bandedTable: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        ingestEpoch(batch, tau, stateDir, outDir, epochId, maxBucket,
-          bandedTable, indexBuckets, pruneStandingBuckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    SurvivorIndex.epochSink(docs, checkpointDir) { (batch, epochId) =>
+      ingestEpoch(batch, tau, stateDir, outDir, epochId, maxBucket, bandedTable)
+    }
 }

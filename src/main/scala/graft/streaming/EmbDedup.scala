@@ -51,9 +51,7 @@ object EmbDedup {
 
   // public: the state-encoder's generated code calls the accessors.
   // `v` is a primitive array (same Catalyst schema as Seq[Double] —
-  // ArrayType(double) — so checkpoints are unaffected BY THIS ENCODER
-  // CHANGE; the r9 armedState addition is a separate migration, handled
-  // by VecBucketProcessorTtl's legacy-timer sweep + stale-orphan guard).
+  // ArrayType(double) — so checkpoints are unaffected by the encoder).
   // WARNING: the Array field makes equals/hashCode REFERENCE-based on
   // these row classes (also BandRowV/BandRowVTs/VecRepT) — compare via
   // rep_id / java.util.Arrays.equals, never ==, distinct, or Set/Map.
@@ -210,10 +208,9 @@ object EmbDedup {
     @transient private var members: ListState[VecRep] = _
     // armed-timer cache (the DocDedup.BucketRepT pattern, as its own
     // value state since the member list has no value slot): no
-    // listTimers() store scan per bucket per batch, and targets are
-    // quantized UP to a ttl/64 grid so a hot bucket pays one
-    // delete+register per grid crossing, not per batch. Forward-only:
-    // expiry never fires before `last activity + ttl`.
+    // listTimers() store scan per bucket per batch; the target moves by
+    // SurvivorIndex.rearm. Set in the same call that first stores
+    // members, cleared together with them.
     @transient private var armedState: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
@@ -228,17 +225,7 @@ object EmbDedup {
       val sorted = rows.toArray.sortBy(r => (r.ts.getTime, r.vec_id))
       val out = Seq.newBuilder[Probe]
       val stored = scala.collection.mutable.ArrayBuffer.empty[VecRep]
-      val hadArmed = armedState.exists()
       members.get().foreach(stored += _)
-      // Checkpoint migration (ADVICE r9): a bucket restored from a
-      // pre-armedState checkpoint has a LIVE timer the armed cache never
-      // saw — armed=0 would skip deleteTimer and the orphan would fire at
-      // the old target, clearing members that newer activity re-armed.
-      // Members-without-armed can only mean that legacy shape, so sweep
-      // the timer store ONCE here (the per-arrival cost the cache avoids
-      // is fine on a one-time migration path).
-      if (!hadArmed && stored.nonEmpty)
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
       sorted.foreach { r =>
         val rn = norm(r.v)
         val (bestId, bestCos, replayed, exactDup) =
@@ -257,25 +244,15 @@ object EmbDedup {
           }
         }
       }
-      val slack = math.max(1L, ttlMs / 64)
-      val ideal = sorted(sorted.length - 1).ts.getTime + ttlMs // ts-sorted max
-      val targetQ = ((ideal + slack - 1) / slack) * slack
       val armed = if (armedState.exists()) armedState.get() else 0L
-      if (targetQ > armed) {
-        if (armed > 0) getHandle.deleteTimer(armed)
-        getHandle.registerTimer(targetQ)
-        armedState.update(targetQ)
-      }
+      val next = SurvivorIndex.rearm(getHandle, armed,
+        sorted(sorted.length - 1).ts.getTime, ttlMs) // ts-sorted max
+      if (next != armed) armedState.update(next)
       out.result().iterator
     }
 
     override def handleExpiredTimer(key: (Int, Long), timers: TimerValues,
                                     expired: ExpiredTimerInfo): Iterator[Probe] = {
-      // Stale-orphan guard (defense in depth for the migration case
-      // above): if a LATER target is armed, this firing is a leftover
-      // legacy timer — the bucket is still live, don't clear it.
-      if (armedState.exists() && armedState.get() > expired.getExpiryTimeInMs())
-        return Iterator.empty
       members.clear()
       armedState.clear() // a re-claimed bucket must re-arm from scratch
       Iterator.empty
@@ -322,8 +299,8 @@ object EmbDedup {
     * candidate-recall trade DocDedup documents: a near-dup of a NON-
     * representative bucket member is missed in this band and must
     * collide with its partner in some other band. Timer cost engineered
-    * as in the doc twin: armed target lives IN the value state,
-    * quantized UP to a ttl/64 grid, forward-only.
+    * as in the doc twin: armed target lives IN the value state and
+    * moves by [[SurvivorIndex.rearm]].
     *
     * Zero-norm contract: a zero-norm arrival never claims a bucket and
     * never matches (cosine undefined), mirroring the batch path. */
@@ -367,15 +344,10 @@ object EmbDedup {
         }
       }
       if (curV != null) {
-        val slack = math.max(1L, ttlMs / 64)
-        val ideal = sorted(sorted.length - 1).ts.getTime + ttlMs // ts-sorted max
-        val targetQ = ((ideal + slack - 1) / slack) * slack
         val armed = if (prev != null) prev.armed else 0L
-        if (targetQ > armed) {
-          if (armed > 0) getHandle.deleteTimer(armed)
-          getHandle.registerTimer(targetQ)
-          rep.update(VecRepT(curId, curV, curN, targetQ))
-        } else if (claimed) rep.update(VecRepT(curId, curV, curN, armed))
+        val next = SurvivorIndex.rearm(getHandle, armed,
+          sorted(sorted.length - 1).ts.getTime, ttlMs) // ts-sorted max
+        if (next != armed || claimed) rep.update(VecRepT(curId, curV, curN, next))
       }
       out.result().iterator
     }
@@ -418,22 +390,6 @@ object EmbDedup {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** Fold per-band probes into one verdict per vector — keep iff no
-    * stored member reached the cosine threshold ([[DocDedup
-    * .foldVerdicts]] with cosine in place of Jaccard). */
-  def foldVerdicts(probes: DataFrame, threshold: Double): DataFrame = {
-    val best = probes
-      .where(col("dup_of") >= 0 && col("cos") >= threshold)
-      .groupBy("vec_id")
-      .agg(max(struct(round(col("cos"), 4).as("cos"),
-        (-col("dup_of")).as("nd"))).as("b"))
-      .select(col("vec_id"), (-col("b.nd")).as("dup_of"), col("b.cos").as("cos"))
-    probes.select("vec_id").distinct()
-      .join(best, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("dup_of").isNull.as("keep"),
-        col("dup_of"), col("cos"))
-  }
-
   /** Greedy per-arrival keep/drop verdicts for an embedding stream —
     * semantics exactly as [[DocDedup.verdictQuery]] (irrevocable at
     * arrival; batch min-id survivors are a subset; equal on
@@ -442,13 +398,10 @@ object EmbDedup {
                    checkpointDir: String,
                    cap: Int = TextPipeline.LshMaxBucket)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    probes(emb, cap).writeStream
-      .foreachBatch { (batch: Dataset[Probe], epochId: Long) =>
-        foldVerdicts(batch.toDF(), threshold)
-          .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    SurvivorIndex.epochSink(probes(emb, cap), checkpointDir) { (batch, epochId) =>
+      SurvivorIndex.foldVerdicts(batch, "vec_id", "cos", threshold)
+        .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
+    }
 
   /** One ingest epoch of [[survivorQuery]] — the vector
     * [[DocDedup.ingestEpoch]]: epoch-keyed idempotent stores (ids /
@@ -460,77 +413,16 @@ object EmbDedup {
   def ingestEpoch(batch: DataFrame, threshold: Double, stateDir: String,
                   outDir: String, epochId: Long,
                   maxBucket: Int = TextPipeline.LshMaxBucket,
-                  bandedTable: Option[String] = None,
-                  indexBuckets: Int = 8,
-                  pruneStandingBuckets: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.persist()
-    b.select("vec_id")
-      .write.mode("overwrite").parquet(s"$stateDir/ids/epoch=$epochId")
-    b.withColumn("v", transform(col("embedding"), _.cast("double")))
-      .select(col("vec_id"), col("v"),
-        sqrt(aggregate(col("v"), lit(0.0d), (a, x) => a + x * x)).as("nrm"))
-      .write.mode("overwrite").parquet(s"$stateDir/vecs/epoch=$epochId")
-    val bandedNew = bandedRows(b).select("vec_id", "band", "bsig")
-    bandedTable match {
-      case Some(t) =>
-        // keyed (file-prunable) layout for new tables — see DocDedup
-        val keyed = !spark.catalog.tableExists(t) ||
-          spark.table(t).columns.contains("bkey")
-        if (keyed)
-          graft.operators.Layout.appendEpochBucketed(
-            bandedNew.withColumn("bkey", hash(col("band"), col("bsig"))),
-            t, indexBuckets, epochId, Seq("bkey"), Seq("band", "bsig"))
-        else
-          graft.operators.Layout.appendEpochBucketed(bandedNew, t,
-            indexBuckets, epochId, Seq("band", "bsig"))
-      case None =>
-        bandedNew.write.mode("overwrite")
-          .parquet(s"$stateDir/banded/epoch=$epochId")
-    }
-    b.unpersist()
-
-    val bandedAll = bandedTable.map(spark.table)
-      .getOrElse(spark.read.parquet(s"$stateDir/banded"))
-    val bandCols =
-      Seq("vec_id", "band", "bsig") ++
-        (if (bandedAll.columns.contains("bkey")) Seq("bkey") else Nil)
-    val allB = bandedAll.select(bandCols.head, bandCols.tail: _*)
-    val newB = bandedAll.where(col("epoch") === epochId)
-      .select(bandCols.head, bandCols.tail: _*)
-    val vecs = spark.read.parquet(s"$stateDir/vecs")
-      .select("vec_id", "v", "nrm")
-    val dot = graft.expressions.VectorExpressions.dotProduct(col("va"), col("vb"))
-    // subset-key co-partition knob — see DocDedup.ingestEpoch
-    val coKey = "spark.sql.requireAllClusterKeysForCoPartition"
-    val coPrev = spark.conf.getOption(coKey)
-    spark.conf.set(coKey, "false")
-    try {
-      TextPipeline.incrementalGuardedCandidates(allB, newB, maxBucket,
-          idCol = "vec_id", pruneBuckets = pruneStandingBuckets)
-        .join(vecs.select(col("vec_id").as("a"), col("v").as("va"),
-          col("nrm").as("na")), "a")
-        .join(vecs.select(col("vec_id").as("b"), col("v").as("vb"),
-          col("nrm").as("nb")), "b")
-        .where(dot / (col("na") * col("nb")) >= threshold)
-        .select("a", "b")
-        .write.mode("overwrite").parquet(s"$stateDir/pairs/epoch=$epochId")
-    } finally coPrev match {
-      case Some(v) => spark.conf.set(coKey, v)
-      case None => spark.conf.unset(coKey)
-    }
-
-    // no pairs yet (the first epochs) gives empty labels, no losers
-    val losers = TextPipeline.connectedComponents(
-        spark.read.parquet(s"$stateDir/pairs").select("a", "b"))
-      .where(col("id") =!= col("rep"))
-      .select(col("id").as("vec_id"))
-    // un-hinted anti join: losers is O(duplicate count) — AQE broadcasts
-    // it when small, shuffles when a dup-heavy feed makes it O(corpus)
-    spark.read.parquet(s"$stateDir/ids").select("vec_id")
-      .join(losers, Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-  }
+                  bandedTable: Option[String] = None): Unit =
+    SurvivorIndex.ingestEpoch(
+      SurvivorIndex.Feed("vec_id", bandedRows(_), "vecs",
+        _.withColumn("v", transform(col("embedding"), _.cast("double")))
+          .select(col("vec_id"), col("v"),
+            sqrt(aggregate(col("v"), lit(0.0d), (a, x) => a + x * x)).as("nrm")),
+        Seq("v" -> "v", "nrm" -> "n"),
+        graft.expressions.VectorExpressions.dotProduct(col("va"), col("vb")) /
+          (col("na") * col("nb")) >= threshold),
+      batch, stateDir, outDir, epochId, maxBucket, bandedTable)
 
   /** Streaming survivor-index maintenance for embeddings — every
     * epoch's snapshot equals batch `Similarity.dedupEmbeddings(lsh)`
@@ -540,15 +432,10 @@ object EmbDedup {
   def survivorQuery(emb: DataFrame, threshold: Double, stateDir: String,
                     outDir: String, checkpointDir: String,
                     maxBucket: Int = TextPipeline.LshMaxBucket,
-                    bandedTable: Option[String] = None,
-                    indexBuckets: Int = 8,
-                    pruneStandingBuckets: Int = 0)
+                    bandedTable: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        ingestEpoch(batch, threshold, stateDir, outDir, epochId, maxBucket,
-          bandedTable, indexBuckets, pruneStandingBuckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    SurvivorIndex.epochSink(emb, checkpointDir) { (batch, epochId) =>
+      ingestEpoch(batch, threshold, stateDir, outDir, epochId, maxBucket,
+        bandedTable)
+    }
 }

@@ -184,6 +184,26 @@ class CorpusStatsSpec extends SparkSpec {
     }
   }
 
+  test("q105 over an empty lineitem table matches its SQL text: 4 " +
+    "zero-count profile rows (ADVICE r12)") {
+    val dir = java.nio.file.Files.createTempDirectory("emptyli").toString
+    try {
+      Tables.lineitem(spark, sf0001).limit(0)
+        .write.parquet(s"$dir/lineitem.parquet")
+      val s = spark.newSession()
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.collect().toSeq.map(_.toSeq.mkString("|"))
+      val sql = rows(s.sql(SqlEntry.extensionSql("q105_profile")))
+      assert(sql == Seq("l_linestatus|0|0|0|null|null",
+        "l_partkey|0|0|0|null|null", "l_quantity|0|0|0|null|null",
+        "l_returnflag|0|0|0|null|null"))
+      assert(rows(SparkEntry.queries("q105_profile")(spark, dir)) == sql)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
   test("q122: matrix cells partition q26's pairs by their source pair") {
     val srcOf = docs.map(d => d._1 -> d._2).toMap
     val q26 = SparkEntry.queries("q26_neardup_jaccard")(spark, sf0001)

@@ -223,4 +223,24 @@ class PlanShapeSpec extends SparkSpec {
         }
     } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
+
+  test("PlanDump.canonical: one query dumped twice in one JVM, other " +
+    "queries built in between, gives equal text") {
+    // q58: lambda variables and a checkpoint RDD; q25: TopK identity hashes
+    val names = Seq("q58_dedup_survivors", "q25_cosine_topk")
+    def raw(n: String): String = SparkEntry.queries(n)(spark, sf0001)
+      .queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val first = names.map(raw)
+    Seq("q62_funnel", "q71_dedup_corpus", "q53_lsh_neardup")
+      .foreach(n => SparkEntry.queries(n)(spark, sf0001).queryExecution.executedPlan)
+    val second = names.map(raw)
+    names.indices.foreach { i =>
+      assert(first(i) != second(i), s"${names(i)}: raw dumps already equal")
+      assert(PlanDump.canonical(first(i)) == PlanDump.canonical(second(i)),
+        s"${names(i)}: canonical dumps differ")
+    }
+    assert(PlanDump.formatted(spark, sf0001, names.head) ==
+      PlanDump.canonical(first.head).trim)
+  }
 }

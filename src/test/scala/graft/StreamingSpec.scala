@@ -20,6 +20,31 @@ class StreamingSpec extends SparkSpec {
                  typ: String = "click", v: Double = 1.0): Event =
     Event(id, ts(minute), user, typ, v, "{}")
 
+  /** Re-executing a survivor-index epoch must not change its output
+    * (MapReduce §3.3): runs `replay` — the last epoch's `ingestEpoch`
+    * again — and asserts that the row count of every store under
+    * `root/state` (ids, the `payload` store, banded rows in `bandedTable`
+    * or `banded/`, pairs) and the epoch's survivor snapshot are
+    * unchanged. */
+  private def assertReplayIdempotent(root: String, payload: String,
+      bandedTable: Option[String], idCol: String, epoch: Long)(replay: => Unit): Unit = {
+    def state(): (Map[String, Long], Set[Long]) = {
+      val stores = Seq("ids", payload, "pairs")
+        .map(d => d -> spark.read.parquet(s"$root/state/$d").count()).toMap +
+        ("banded" -> bandedTable.fold(
+          spark.read.parquet(s"$root/state/banded").count())(spark.table(_).count()))
+      val snapshot = spark.read.parquet(s"$root/out/epoch=$epoch")
+        .select(idCol).collect().map(_.getLong(0)).toSet
+      (stores, snapshot)
+    }
+    val (storesBefore, snapshotBefore) = state()
+    replay
+    val (storesAfter, snapshotAfter) = state()
+    assert(storesAfter == storesBefore, "replayed epoch changed the stores")
+    assert(snapshotAfter == snapshotBefore,
+      "replayed epoch changed the survivor snapshot")
+  }
+
   test("T1 tumbling window counts (append mode after watermark passes)") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
@@ -508,6 +533,13 @@ class StreamingSpec extends SparkSpec {
     assert(fin == finBatch,
       s"final stream-only: ${(fin -- finBatch).toSeq.sorted}; " +
         s"batch-only: ${(finBatch -- fin).toSeq.sorted}")
+    // failure-recovery replay of the last epoch on the parquet-directory
+    // layout
+    val last = (chunks.length - 1).toLong
+    assertReplayIdempotent(root, "words", None, "doc_id", last) {
+      DocDedup.ingestEpoch(chunks.last.toSeq.toDF(), 0.8, s"$root/state",
+        s"$root/out", last, mb)
+    }
   }
 
   test("greedy verdict stream: one verdict per doc; batch(first) " +
@@ -739,14 +771,12 @@ class StreamingSpec extends SparkSpec {
         s"stream-only: ${(fin -- finBatch).toSeq.sorted}; " +
           s"batch-only: ${(finBatch -- fin).toSeq.sorted}")
       // failure-recovery replay of the LAST epoch: the bucketed store
-      // must skip the append (exactly-once) and the snapshot must not move
-      val rowsBefore = spark.table(tbl).count()
-      DocDedup.ingestEpoch(chunks.last.toSeq.toDF(), 0.8, s"$root/state",
-        s"$root/out", (chunks.length - 1).toLong, mb, Some(tbl))
-      assert(spark.table(tbl).count() == rowsBefore,
-        "replayed epoch duplicated rows in the bucketed banded table")
-      assert(snapshot(chunks.length - 1) == fin,
-        "replayed epoch changed the survivor snapshot")
+      // rewrites its epoch partition instead of appending to it
+      val last = (chunks.length - 1).toLong
+      assertReplayIdempotent(root, "words", Some(tbl), "doc_id", last) {
+        DocDedup.ingestEpoch(chunks.last.toSeq.toDF(), 0.8, s"$root/state",
+          s"$root/out", last, mb, Some(tbl))
+      }
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
@@ -802,6 +832,11 @@ class StreamingSpec extends SparkSpec {
     assert(fin == finBatch,
       s"final stream-only: ${(fin -- finBatch).toSeq.sorted}; " +
         s"batch-only: ${(finBatch -- fin).toSeq.sorted}")
+    val last = (chunks.length - 1).toLong
+    assertReplayIdempotent(root, "vecs", None, "vec_id", last) {
+      streaming.EmbDedup.ingestEpoch(chunks.last.toSeq.toDF(), 0.3,
+        s"$root/state", s"$root/out", last, mb)
+    }
   }
 
   test("EmbDedup survivor index on a BUCKETED banded table matches " +
@@ -835,6 +870,11 @@ class StreamingSpec extends SparkSpec {
       assert(fin == batch,
         s"stream-only: ${(fin -- batch).toSeq.sorted}; " +
           s"batch-only: ${(batch -- fin).toSeq.sorted}")
+      val last = (chunks.length - 1).toLong
+      assertReplayIdempotent(root, "vecs", Some(tbl), "vec_id", last) {
+        streaming.EmbDedup.ingestEpoch(chunks.last.toSeq.toDF(), 0.3,
+          s"$root/state", s"$root/out", last, 100000, Some(tbl))
+      }
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 

@@ -74,13 +74,14 @@ object PlanDump {
     * appearance; identity hashes (`TopKPairs@1b2c3d`,
     * `$Lambda$2660/0x...@2688b2be`), `plan_id`s and the source line of
     * RDD call sites (`localCheckpoint at Advanced.scala:2715`) are
-    * dropped. */
+    * dropped; the distinct groups of an `Expand` are put in one order
+    * ([[sortDistinctGroups]]). */
   def canonical(text: String): String = {
-    val stripped = text
+    val stripped = sortDistinctGroups(text
       .replaceAll("""\$Lambda(\$\d+)?(/0x[0-9a-f]+)?""", "\\$Lambda")
       .replaceAll("""(?<=[\w$])@[0-9a-f]{1,8}\b""", "")
       .replaceAll("""\[plan_id=\d+\]""", "[plan_id]")
-      .replaceAll("""(\.scala):\d+""", "$1")
+      .replaceAll("""(\.scala):\d+""", "$1"))
     Seq("""(#)(\d+)""".r, """(lambda [A-Za-z]+_)(\d+)""".r, """(RDD\[)(\d+)""".r)
       .foldLeft(stripped) { (t, re) =>
         val ids = scala.collection.mutable.Map.empty[String, Int]
@@ -88,6 +89,58 @@ object PlanDump {
           m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
       }
   }
+
+  /** Spark's distinct-aggregate rewrite gives each distinct group of an
+    * `Expand` a `gid` literal (read back by `(gid#N = k)` filters) and
+    * orders the groups, and the columns they fill, by expression-id
+    * hashes, so one query prints either order depending on what the JVM
+    * built before it (q147's two distinct counts). This sorts each such
+    * `Expand`'s groups by the names of the columns they fill, renumbers
+    * the gids in that order and moves those columns into it wherever the
+    * `Expand`'s output list is printed. */
+  private def sortDistinctGroups(text: String): String =
+    """(?m)^\(\d+\) Expand.*\n.*\nArguments: (.*)$""".r.findAllMatchIn(text)
+      .foldLeft(text) { (t, m) =>
+        val args = items(m.group(1))
+        val groups = items(unwrap(args.head)).map(g => items(unwrap(g)))
+        val out = items(unwrap(args.last))
+        if (args.length != 2 || !out.last.startsWith("gid#") ||
+            groups.exists(_.length != out.length)) t
+        else {
+          val varying = out.indices.init.filter(i => groups.map(_(i)).distinct.size > 1)
+          def fills(g: Seq[String]) = varying.filter(g(_) != "null")
+          val sorted = groups.sortBy(g =>
+            fills(g).map(i => out(i).replaceAll("""#\d+\w?$""", "")).mkString(", "))
+          val cols = (sorted.flatMap(fills) ++ varying).distinct.iterator
+          val perm = out.indices.map(i => if (varying.contains(i)) cols.next() else i)
+          val gid = sorted.map(_.last).zip(groups.map(_.last).sortBy(_.toInt)).toMap
+          val newArgs = sorted.map(g => perm.init.map(g) :+ gid(g.last))
+            .map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
+          val newOut = perm.map(out).mkString(", ")
+          val gidRef = java.util.regex.Pattern.quote(out.last)
+          raw"\($gidRef = (\d+)\)".r.replaceAllIn(
+            t.replace(m.group(1), s"$newArgs, [$newOut]")
+              .replace(out.mkString(", "), newOut),
+            g => scala.util.matching.Regex.quoteReplacement(
+              s"(${out.last} = ${gid.getOrElse(g.group(1), g.group(1))})"))
+        }
+      }
+
+  /** The top-level `, `-separated items of a plan-text list. */
+  private def items(list: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var depth = 0
+    var from = 0
+    for (i <- list.indices) list(i) match {
+      case '(' | '[' => depth += 1
+      case ')' | ']' => depth -= 1
+      case ',' if depth == 0 => out += list.substring(from, i).trim; from = i + 1
+      case _ =>
+    }
+    (out += list.substring(from).trim).result()
+  }
+
+  private def unwrap(s: String): String = s.stripPrefix("[").stripSuffix("]")
 
   def main(args: Array[String]): Unit = {
     require(args.isEmpty || args.length >= 3,

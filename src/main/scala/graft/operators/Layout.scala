@@ -32,11 +32,10 @@ object Layout {
       .saveAsTable(table)
 
   /** Append ONE epoch of rows to a standing table that is
-    * epoch-partitioned AND bucketed on `bucketCols` — the layout a
-    * streaming survivor index wants at scale: every epoch's candidate
-    * join and per-bucket guard aggregate read the standing side
+    * epoch-partitioned AND bucketed on `bucketCols`: a join or
+    * aggregate keyed on `bucketCols` reads the standing side
     * Exchange-free (bucketing carries across epoch partitions), so only
-    * the epoch-sized new batch ever shuffles. Idempotent under
+    * the epoch-sized new batch shuffles. Idempotent under
     * micro-batch replay: the epoch's partition is REWRITTEN (dynamic
     * partition overwrite touching only `epoch=N`), not skipped-if-seen —
     * a check-then-act skip would permanently lose rows after a crash
@@ -47,12 +46,7 @@ object Layout {
     *
     * `sortCols` (defaults to `bucketCols`) orders rows WITHIN each
     * bucket file — pass the real lookup keys when bucketing on a
-    * derived single key: Spark prunes bucket FILES only for
-    * single-column bucket specs, so the file-prunable layout for a
-    * (band, bsig) index is `bucketCols = Seq("bkey")` with
-    * `bkey = functions.hash(band, bsig)` in `df` and
-    * `sortCols = Seq("band", "bsig")` for row-group stats — the layout
-    * the streaming survivor index writes (`streaming.SurvivorIndex`). */
+    * derived single key, so row-group stats still prune on them. */
   def appendEpochBucketed(df: DataFrame, table: String, buckets: Int,
                           epochId: Long, bucketCols: Seq[String],
                           sortCols: Seq[String] = Seq.empty): Unit = {

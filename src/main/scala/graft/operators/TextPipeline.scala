@@ -422,54 +422,6 @@ object TextPipeline {
     smallPairs.union(starPairs).distinct()
   }
 
-  /** Prune the standing banded index to the buckets the fresh batch
-    * actually touches: collect the batch's DISTINCT (band, bsig) keys —
-    * bounded by construction via `limit(cap + 1)`, so the collect is
-    * O(cap) no matter how large the batch is — and push them back as a
-    * per-band `band = b AND bsig IN (...)` disjunction on the standing
-    * scan. The predicate reaches parquet as pushed filters; because
-    * `Layout.appendEpochBucketed` sorts files by (band, bsig), row-group
-    * min/max stats then skip every untouched bucket, so a tiny epoch
-    * reads O(touched buckets) of the index instead of all of it.
-    *
-    * Correct by construction: the filter keys are exactly the join keys
-    * of every downstream use, so (a) rows outside touched buckets could
-    * never join a fresh row anyway, and (b) every row of a touched
-    * bucket survives the filter — the per-bucket guard metadata (bn,
-    * rep) computed on the pruned frame is IDENTICAL to the unpruned
-    * value for all buckets that matter. If the batch touches more than
-    * `cap` buckets the frame is returned unchanged (a big epoch reads
-    * most of the index anyway; an enormous IN list would only bloat the
-    * plan). `cap <= 0` disables pruning. */
-  private[graft] def pruneToTouchedBuckets(standing: DataFrame,
-      fresh: DataFrame, cap: Int): DataFrame = {
-    if (cap <= 0) return standing
-    val keyed = standing.columns.contains("bkey")
-    val keyCols = if (keyed) Seq("bkey", "band", "bsig") else Seq("band", "bsig")
-    val keys = fresh.select(keyCols.head, keyCols.tail: _*)
-      .distinct().limit(cap + 1).collect()
-    if (keys.length > cap) standing
-    else if (keys.isEmpty) standing.where(lit(false)) // empty batch: no buckets touched
-    else {
-      // (band, bsig) sit at positions keyCols.length-2 / -1 either way
-      val b = keyCols.length - 2
-      val pred = keys.groupBy(_.get(b)).toSeq
-        .map { case (band, rows) =>
-          col("band") === lit(band) &&
-            col("bsig").isin(rows.map(_.get(b + 1)).toIndexedSeq: _*)
-        }
-        .reduce(_ || _)
-      // bkey IN (...) first: on a table BUCKETED BY the single bkey
-      // column this is what unlocks bucket FILE pruning (Spark only
-      // prunes files for single-column bucket specs); the per-band
-      // disjunction then prunes row groups within surviving files
-      val full =
-        if (keyed) col("bkey").isin(keys.map(_.get(0)).toIndexedSeq: _*) && pred
-        else pred
-      standing.where(full)
-    }
-  }
-
   /** [[bucketGuardedCandidates]] for INCREMENTAL ingest: candidates
     * touch only the `fresh` banded rows against the `standing` index
     * (which already contains them — the guard metadata is computed over
@@ -482,42 +434,16 @@ object TextPipeline {
     * the per-bucket metadata aggregate and the candidate join both read
     * it Exchange-free and only the epoch-sized `fresh` side shuffles —
     * the streaming mirror of q65's bucketed-standing-corpus posture
-    * (asserted in LayoutSpec). `pruneBuckets > 0` additionally prunes
-    * standing-side READS to the touched buckets via
-    * [[pruneToTouchedBuckets]] — worth it when epochs are tiny relative
-    * to the index (the driver-side key collect is bounded at
-    * `pruneBuckets + 1` rows by construction). */
+    * (asserted in LayoutSpec). */
   private[graft] def incrementalGuardedCandidates(standing: DataFrame,
-      fresh: DataFrame, cap: Int, idCol: String = "doc_id",
-      pruneBuckets: Int = 0): DataFrame = {
-    // Keyed layout (round 7): when the standing index carries `bkey`
-    // (= functions.hash(band, bsig), the single BUCKET column of the
-    // file-prunable layout — see Layout scaladoc), thread it through
-    // every stage: grouping/joining on the superset (bkey, band, bsig)
-    // keeps results identical (bkey is functionally dependent on the
-    // other two) and pruneToTouchedBuckets pushes bkey literals for
-    // genuine bucket-file skipping. CAVEAT: for the standing side to
-    // satisfy the join distribution from its HashPartitioning(bkey)
-    // bucket spec — i.e. to keep the no-standing-shuffle property —
-    // the session must run with
-    // spark.sql.requireAllClusterKeysForCoPartition=false (the public
-    // planner knob for joining bucketed tables on a key subset;
-    // results are identical either way). SurvivorIndex.ingestEpoch
-    // sets/restores it around its actions; direct callers own it
-    // (LayoutSpec pins both the pruning and the no-shuffle plan).
-    val keyed = standing.columns.contains("bkey")
-    val fr =
-      if (keyed && !fresh.columns.contains("bkey"))
-        fresh.withColumn("bkey", hash(col("band"), col("bsig")))
-      else fresh
-    val keyCols = if (keyed) Seq("bkey", "band", "bsig") else Seq("band", "bsig")
-    val st = pruneToTouchedBuckets(standing, fr, pruneBuckets)
-    val meta = st.groupBy(keyCols.map(col): _*)
+      fresh: DataFrame, cap: Int, idCol: String = "doc_id"): DataFrame = {
+    val keyCols = Seq("band", "bsig")
+    val meta = standing.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("bn"), min(idCol).as("rep"))
-    val nj = fr.select((col(idCol).as("n") +: keyCols.map(col)): _*)
+    val nj = fresh.select((col(idCol).as("n") +: keyCols.map(col)): _*)
       .join(meta, keyCols)
     val small = nj.where(col("bn") <= cap)
-      .join(st.select((col(idCol).as("s") +: keyCols.map(col)): _*), keyCols)
+      .join(standing.select((col(idCol).as("s") +: keyCols.map(col)): _*), keyCols)
       .where(col("n") =!= col("s"))
       .select("n", "s")
     val star = nj.where(col("bn") > cap && col("n") =!= col("rep"))

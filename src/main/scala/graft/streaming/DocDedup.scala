@@ -397,17 +397,12 @@ object DocDedup {
     *
     * Per-epoch cost beyond the new batch: one scan of the standing
     * banded store and components over the cumulative PAIR set —
-    * near-dup pairs, ≪ corpus. Pass `bandedTable` to keep the banded
-    * index as an epoch-partitioned table BUCKETED on `bkey` =
-    * hash(band, bsig) instead of plain parquet: the guard aggregate and
-    * candidate join then read the standing side Exchange-free and only
-    * the new batch shuffles (the q65 posture, asserted in LayoutSpec). */
+    * near-dup pairs, ≪ corpus. */
   def ingestEpoch(batch: DataFrame, tau: Double, stateDir: String,
                   outDir: String, epochId: Long,
-                  maxBucket: Int = TextPipeline.LshMaxBucket,
-                  bandedTable: Option[String] = None): Unit =
+                  maxBucket: Int = TextPipeline.LshMaxBucket): Unit =
     SurvivorIndex.ingestEpoch(survivorFeed(tau), batch, stateDir, outDir,
-      epochId, maxBucket, bandedTable)
+      epochId, maxBucket)
 
   /** The document feed of the survivor index. Word sets are stored
     * SORTED (state-format contract since r13) so the verify is the
@@ -446,10 +441,9 @@ object DocDedup {
     * pattern) read the latest epoch here. */
   def survivorQuery(docs: DataFrame, tau: Double, stateDir: String,
                     outDir: String, checkpointDir: String,
-                    maxBucket: Int = TextPipeline.LshMaxBucket,
-                    bandedTable: Option[String] = None)
+                    maxBucket: Int = TextPipeline.LshMaxBucket)
       : org.apache.spark.sql.streaming.StreamingQuery =
     SurvivorIndex.epochSink(docs, checkpointDir) { (batch, epochId) =>
-      ingestEpoch(batch, tau, stateDir, outDir, epochId, maxBucket, bandedTable)
+      ingestEpoch(batch, tau, stateDir, outDir, epochId, maxBucket)
     }
 }

@@ -412,8 +412,7 @@ object EmbDedup {
     * survivor snapshot at `outDir/epoch=N`. */
   def ingestEpoch(batch: DataFrame, threshold: Double, stateDir: String,
                   outDir: String, epochId: Long,
-                  maxBucket: Int = TextPipeline.LshMaxBucket,
-                  bandedTable: Option[String] = None): Unit =
+                  maxBucket: Int = TextPipeline.LshMaxBucket): Unit =
     SurvivorIndex.ingestEpoch(
       SurvivorIndex.Feed("vec_id", bandedRows(_), "vecs",
         _.withColumn("v", transform(col("embedding"), _.cast("double")))
@@ -422,7 +421,7 @@ object EmbDedup {
         Seq("v" -> "v", "nrm" -> "n"),
         graft.expressions.VectorExpressions.dotProduct(col("va"), col("vb")) /
           (col("na") * col("nb")) >= threshold),
-      batch, stateDir, outDir, epochId, maxBucket, bandedTable)
+      batch, stateDir, outDir, epochId, maxBucket)
 
   /** Streaming survivor-index maintenance for embeddings — every
     * epoch's snapshot equals batch `Similarity.dedupEmbeddings(lsh)`
@@ -431,11 +430,9 @@ object EmbDedup {
     * documents. */
   def survivorQuery(emb: DataFrame, threshold: Double, stateDir: String,
                     outDir: String, checkpointDir: String,
-                    maxBucket: Int = TextPipeline.LshMaxBucket,
-                    bandedTable: Option[String] = None)
+                    maxBucket: Int = TextPipeline.LshMaxBucket)
       : org.apache.spark.sql.streaming.StreamingQuery =
     SurvivorIndex.epochSink(emb, checkpointDir) { (batch, epochId) =>
-      ingestEpoch(batch, threshold, stateDir, outDir, epochId, maxBucket,
-        bandedTable)
+      ingestEpoch(batch, threshold, stateDir, outDir, epochId, maxBucket)
     }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StatefulProcessorHandle, StreamingQuery}
 
-import graft.operators.{Layout, TextPipeline}
+import graft.operators.TextPipeline
 
 /** What the document and embedding dedup feeds share: the epoch-keyed
   * survivor index behind both `survivorQuery`s, the verdict fold behind
@@ -23,13 +23,9 @@ private[streaming] object SurvivorIndex {
                         store: String, payload: DataFrame => DataFrame,
                         sides: Seq[(String, String)], verify: Column)
 
-  /** Bucket count of the `bandedTable` layout. */
-  private val IndexBuckets = 8
-
   /** One ingest epoch; [[DocDedup.ingestEpoch]] states the contract. */
   def ingestEpoch(feed: Feed, batch: DataFrame, stateDir: String,
-                  outDir: String, epochId: Long, maxBucket: Int,
-                  bandedTable: Option[String]): Unit = {
+                  outDir: String, epochId: Long, maxBucket: Int): Unit = {
     val spark = batch.sparkSession
     val id = feed.idCol
     val b = batch.persist()
@@ -37,50 +33,24 @@ private[streaming] object SurvivorIndex {
       .write.mode("overwrite").parquet(s"$stateDir/ids/epoch=$epochId")
     feed.payload(b)
       .write.mode("overwrite").parquet(s"$stateDir/${feed.store}/epoch=$epochId")
-    val bandedNew = feed.banded(b).select(id, "band", "bsig")
-    bandedTable match {
-      case Some(t) =>
-        // file-prunable keyed layout: bucketed on the single bkey column,
-        // sorted by (band, bsig) for row-group stats
-        Layout.appendEpochBucketed(
-          bandedNew.withColumn("bkey", hash(col("band"), col("bsig"))),
-          t, IndexBuckets, epochId, Seq("bkey"), Seq("band", "bsig"))
-      case None =>
-        bandedNew.write.mode("overwrite")
-          .parquet(s"$stateDir/banded/epoch=$epochId")
-    }
+    feed.banded(b).select(id, "band", "bsig")
+      .write.mode("overwrite").parquet(s"$stateDir/banded/epoch=$epochId")
     b.unpersist()
 
-    val bandedAll = bandedTable.map(spark.table)
-      .getOrElse(spark.read.parquet(s"$stateDir/banded"))
-    val bandCols = Seq(id, "band", "bsig") ++ bandedTable.map(_ => "bkey")
-    val allB = bandedAll.select(bandCols.head, bandCols.tail: _*)
-    val newB = bandedAll.where(col("epoch") === epochId)
-      .select(bandCols.head, bandCols.tail: _*)
+    val bandedAll = spark.read.parquet(s"$stateDir/banded")
+    val allB = bandedAll.select(id, "band", "bsig")
+    val newB = bandedAll.where(col("epoch") === epochId).select(id, "band", "bsig")
     val stored = spark.read.parquet(s"$stateDir/${feed.store}")
       .select(id, feed.sides.map(_._1): _*)
     def side(s: String): DataFrame = stored.select(col(id).as(s) +:
       feed.sides.map { case (c, stem) => col(c).as(stem + s) }: _*)
-    // subset-key co-partition knob: lets the bkey-bucketed standing
-    // table satisfy the (bkey, band, bsig) join distribution from its
-    // bucket spec — no standing shuffle; results identical either way.
-    // Set around OUR action only (the pairs write below plans and runs
-    // inside this scope), restored after.
-    val coKey = "spark.sql.requireAllClusterKeysForCoPartition"
-    val coPrev = spark.conf.getOption(coKey)
-    spark.conf.set(coKey, "false")
-    try {
-      TextPipeline.incrementalGuardedCandidates(allB, newB, maxBucket, idCol = id)
-        // exact verification of candidates only — minHashLshPairs' contract
-        .join(side("a"), "a")
-        .join(side("b"), "b")
-        .where(feed.verify)
-        .select("a", "b")
-        .write.mode("overwrite").parquet(s"$stateDir/pairs/epoch=$epochId")
-    } finally coPrev match {
-      case Some(v) => spark.conf.set(coKey, v)
-      case None => spark.conf.unset(coKey)
-    }
+    TextPipeline.incrementalGuardedCandidates(allB, newB, maxBucket, idCol = id)
+      // exact verification of candidates only — minHashLshPairs' contract
+      .join(side("a"), "a")
+      .join(side("b"), "b")
+      .where(feed.verify)
+      .select("a", "b")
+      .write.mode("overwrite").parquet(s"$stateDir/pairs/epoch=$epochId")
 
     // no pairs yet (the first epochs) gives empty labels, no losers
     val losers = TextPipeline.connectedComponents(

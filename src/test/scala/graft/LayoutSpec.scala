@@ -96,9 +96,9 @@ class LayoutSpec extends SparkSpec {
 
   test("streaming survivor index vs a BUCKETED standing banded store: " +
     "the standing side is never re-shuffled on (band, bsig)") {
-    // The stream form of the q65 posture (DocDedup/EmbDedup ingestEpoch
-    // with bandedTable set): the cumulative banded index lives in an
-    // epoch-partitioned table bucketed on (band, bsig), so the guard
+    // The stream form of the q65 posture: a cumulative banded index
+    // kept in an epoch-partitioned table bucketed on (band, bsig) feeds
+    // the survivor index's candidate stage, so the guard
     // aggregate AND the candidate join consume it Exchange-free; only
     // the epoch-sized fresh side hashes into place. The candidates'
     // final distinct still shuffles — but that moves candidate PAIRS,
@@ -145,153 +145,6 @@ class LayoutSpec extends SparkSpec {
       val got = cand.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == want)
     } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    }
-  }
-
-  test("touched-bucket pruning pushes the epoch's bucket keys into the " +
-    "standing scan and changes no candidates") {
-    // NOTES r6 candidate: beyond never re-SHUFFLING the bucketed
-    // standing index, a tiny epoch should not re-READ all of it either.
-    // pruneToTouchedBuckets collects the batch's distinct (band, bsig)
-    // keys (bounded at cap+1 rows) and pushes them as parquet filters;
-    // with files sorted by (band, bsig) the untouched buckets' row
-    // groups are skipped. Asserted here: the filter reaches the scan as
-    // PushedFilters, the pruned frame holds exactly the touched-bucket
-    // rows, candidate output is bit-identical, and an over-cap batch
-    // falls back to the unpruned frame.
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import graft.streaming.DocDedup
-    import graft.operators.TextPipeline
-    val tbl = "b_banded_prune_layoutspec"
-    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
-    val banded0 = DocDedup.bandedRows(docs.where(col("doc_id") % 3 =!= 2))
-      .select("doc_id", "band", "bsig")
-    val fresh = DocDedup.bandedRows(docs.where(col("doc_id").isin(2L, 5L)))
-      .select("doc_id", "band", "bsig").persist()
-    try {
-      Layout.appendEpochBucketed(banded0, tbl, 4, 0L, Seq("band", "bsig"))
-      val standing = spark.table(tbl).select("doc_id", "band", "bsig")
-      val pruned = TextPipeline.pruneToTouchedBuckets(standing, fresh, 64)
-      pruned.collect()
-      val scan = pruned.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec => f
-      }.head
-      val pf = scan.metadata.getOrElse("PushedFilters", "")
-      assert(pf.contains("band") && pf.contains("bsig"),
-        s"bucket keys not pushed to the standing scan: $pf")
-      // row-level: exactly the standing rows in the batch's buckets
-      val touched = fresh.select("band", "bsig").distinct()
-        .collect().map(r => (r.getInt(0), r.getString(1))).toSet
-      val want = standing.collect()
-        .filter(r => touched((r.getInt(1), r.getString(2))))
-        .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-      val got = pruned.collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-      assert(got == want, "pruned frame is not exactly the touched buckets")
-      assert(got.size < standing.count(),
-        "pruning test is vacuous: the tiny batch touches every bucket")
-      // end-to-end parity: identical candidate pairs with pruning on
-      val cWant = TextPipeline
-        .incrementalGuardedCandidates(standing, fresh, 128)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val cGot = TextPipeline
-        .incrementalGuardedCandidates(standing, fresh, 128, pruneBuckets = 64)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(cGot == cWant)
-      // over-cap batch: helper must return the frame unchanged
-      assert(TextPipeline.pruneToTouchedBuckets(standing, fresh, 1) eq standing)
-      // disabled pruning: identity
-      assert(TextPipeline.pruneToTouchedBuckets(standing, fresh, 0) eq standing)
-      // empty batch touches no buckets: pruned standing is empty and the
-      // candidate relation is empty (not an error)
-      val none = fresh.where(lit(false))
-      assert(TextPipeline.pruneToTouchedBuckets(standing, none, 64).count() == 0)
-      assert(TextPipeline
-        .incrementalGuardedCandidates(standing, none, 128, pruneBuckets = 64)
-        .count() == 0)
-    } finally {
-      fresh.unpersist()
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    }
-  }
-
-  test("keyed standing index: bkey literals prune bucket FILES and the " +
-    "standing side still never shuffles") {
-    // Spark prunes bucket files only for SINGLE-column bucket specs, so
-    // the (band, bsig) index gets a derived bucket key bkey =
-    // hash(band, bsig): candidates group/join on the superset
-    // (bkey, band, bsig) — identical results, distribution satisfied by
-    // HashPartitioning(bkey) — and pruneToTouchedBuckets pushes bkey
-    // IN (...) so a tiny epoch's scan selects only the touched bucket
-    // files ("SelectedBucketsCount" in the scan) on top of the
-    // row-group pruning the unkeyed layout already had.
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import graft.streaming.DocDedup
-    import graft.operators.TextPipeline
-    val tbl = "b_banded_keyed_layoutspec"
-    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
-    val keyedOf = (df: org.apache.spark.sql.DataFrame) =>
-      df.withColumn("bkey", hash(col("band"), col("bsig")))
-    val banded0 = keyedOf(DocDedup.bandedRows(docs.where(col("doc_id") % 3 =!= 2))
-      .select("doc_id", "band", "bsig"))
-    val fresh = keyedOf(DocDedup.bandedRows(docs.where(col("doc_id").isin(2L, 5L)))
-      .select("doc_id", "band", "bsig")).persist()
-    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false",
-      // the subset-key co-partition knob the keyed layout documents
-      // (ingestEpoch sets it around its own actions)
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      Layout.appendEpochBucketed(banded0, tbl, 8, 0L,
-        Seq("bkey"), Seq("band", "bsig"))
-      val standing = spark.table(tbl).select("doc_id", "band", "bsig", "bkey")
-      val cand = TextPipeline.incrementalGuardedCandidates(
-        standing, fresh, 128, pruneBuckets = 64)
-      cand.collect()
-      val exec = cand.queryExecution.executedPlan
-      // 1. bucket-file pruning visible on the standing scan
-      val scans = exec.collect {
-        case f: FileSourceScanExec if f.toString.contains(tbl) => f
-      }
-      assert(scans.nonEmpty, s"no standing-table scan in plan:\n$exec")
-      val sel = scans.map(_.toString).filter(_.contains("SelectedBucketsCount"))
-      assert(sel.nonEmpty,
-        s"no SelectedBucketsCount on the standing scans:\n${scans.head}")
-      val m = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(sel.head)
-      assert(m.isDefined && m.get.group(1).toInt < m.get.group(2).toInt,
-        s"bucket files not pruned: ${sel.head}")
-      // 2. the standing side still never re-shuffles: every bkey-keyed
-      // Exchange (the join distribution) must sit over the FRESH side —
-      // the pairs-distinct Exchange on (a, b) spans the whole tree and
-      // is not a bucket-key shuffle
-      val bkeyExchanges = exec.collect {
-        case e: ShuffleExchangeExec
-          if e.outputPartitioning.toString.contains("bkey") => e
-      }
-      assert(bkeyExchanges.nonEmpty, // sanity: the join is not broadcast
-        s"expected the fresh side to hash on bkey:\n$exec")
-      val offending = bkeyExchanges.filter(_.child.toString.contains(tbl))
-      assert(offending.isEmpty,
-        s"keyed standing table re-shuffled:\n${offending.mkString}")
-      // 3. parity with the plain unkeyed + unpruned path
-      val plain = DocDedup.bandedRows(docs.where(col("doc_id") % 3 =!= 2))
-        .select("doc_id", "band", "bsig")
-      val want = TextPipeline.incrementalGuardedCandidates(
-          plain, fresh.drop("bkey"), 128)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val got = cand.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == want)
-    } finally {
-      fresh.unpersist()
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

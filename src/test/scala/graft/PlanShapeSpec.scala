@@ -226,8 +226,9 @@ class PlanShapeSpec extends SparkSpec {
 
   test("PlanDump.canonical: one query dumped twice in one JVM, other " +
     "queries built in between, gives equal text") {
-    // q58: lambda variables and a checkpoint RDD; q25: TopK identity hashes
-    val names = Seq("q58_dedup_survivors", "q25_cosine_topk")
+    // q58: lambda variables and a checkpoint RDD; q25: TopK identity
+    // hashes; q147: the order of its Expand's two distinct groups
+    val names = Seq("q58_dedup_survivors", "q25_cosine_topk", "q147_stickiness")
     def raw(n: String): String = SparkEntry.queries(n)(spark, sf0001)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -242,5 +243,29 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(PlanDump.formatted(spark, sf0001, names.head) ==
       PlanDump.canonical(first.head).trim)
+    // q147 prints either group order, by the expression ids handed out
+    // before it: more builds canonicalize alike, whichever orders occur
+    val q147 = Seq.fill(12)(raw("q147_stickiness")) :+ first(2)
+    assert(q147.map(PlanDump.canonical).distinct.size == 1,
+      "q147: canonical dumps differ")
+    // both orders, as q147 prints them, whatever this JVM happens to build
+    def expand(groups: String, cols: String, gidCase: Int, gidUser: Int) =
+      s"""(9) Expand [codegen id : 2]
+         |Input [3]: [user_id#2L, aday#5, day#4]
+         |Arguments: $groups, [$cols]
+         |
+         |(13) HashAggregate [codegen id : 3]
+         |Input [4]: [$cols]
+         |Functions [2]: [partial_count(CASE WHEN (aday = day) THEN user_id END#7L) FILTER (WHERE (gid#8 = $gidCase)), partial_count(user_id#6L) FILTER (WHERE (gid#8 = $gidUser))]
+         |""".stripMargin
+    val caseCol = "CASE WHEN (aday = day) THEN user_id END#7L"
+    val caseArg = "CASE WHEN (aday#5 = day#4) THEN user_id#2L END"
+    val userFirst = expand(s"[[day#4, user_id#2L, null, 1], [day#4, null, $caseArg, 2]]",
+      s"day#4, user_id#6L, $caseCol, gid#8", 2, 1)
+    val caseFirst = expand(s"[[day#4, $caseArg, null, 1], [day#4, null, user_id#2L, 2]]",
+      s"day#4, $caseCol, user_id#6L, gid#8", 1, 2)
+    assert(PlanDump.canonical(userFirst) == PlanDump.canonical(caseFirst),
+      s"Expand group orders canonicalize differently:\n" +
+        s"${PlanDump.canonical(userFirst)}\n${PlanDump.canonical(caseFirst)}")
   }
 }

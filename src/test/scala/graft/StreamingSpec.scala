@@ -23,16 +23,13 @@ class StreamingSpec extends SparkSpec {
   /** Re-executing a survivor-index epoch must not change its output
     * (MapReduce §3.3): runs `replay` — the last epoch's `ingestEpoch`
     * again — and asserts that the row count of every store under
-    * `root/state` (ids, the `payload` store, banded rows in `bandedTable`
-    * or `banded/`, pairs) and the epoch's survivor snapshot are
-    * unchanged. */
+    * `root/state` (ids, the `payload` store, banded rows, pairs) and
+    * the epoch's survivor snapshot are unchanged. */
   private def assertReplayIdempotent(root: String, payload: String,
-      bandedTable: Option[String], idCol: String, epoch: Long)(replay: => Unit): Unit = {
+      idCol: String, epoch: Long)(replay: => Unit): Unit = {
     def state(): (Map[String, Long], Set[Long]) = {
-      val stores = Seq("ids", payload, "pairs")
-        .map(d => d -> spark.read.parquet(s"$root/state/$d").count()).toMap +
-        ("banded" -> bandedTable.fold(
-          spark.read.parquet(s"$root/state/banded").count())(spark.table(_).count()))
+      val stores = Seq("ids", payload, "banded", "pairs")
+        .map(d => d -> spark.read.parquet(s"$root/state/$d").count()).toMap
       val snapshot = spark.read.parquet(s"$root/out/epoch=$epoch")
         .select(idCol).collect().map(_.getLong(0)).toSet
       (stores, snapshot)
@@ -536,10 +533,14 @@ class StreamingSpec extends SparkSpec {
     // failure-recovery replay of the last epoch on the parquet-directory
     // layout
     val last = (chunks.length - 1).toLong
-    assertReplayIdempotent(root, "words", None, "doc_id", last) {
+    assertReplayIdempotent(root, "words", "doc_id", last) {
       DocDedup.ingestEpoch(chunks.last.toSeq.toDF(), 0.8, s"$root/state",
         s"$root/out", last, mb)
     }
+    // an empty epoch N+1 leaves epoch N's survivor snapshot as it was
+    DocDedup.ingestEpoch(Seq.empty[DocDedup.Doc].toDF(), 0.8, s"$root/state",
+      s"$root/out", last + 1, mb)
+    assert(snapshot(chunks.length) == fin, "an empty epoch changed the snapshot")
   }
 
   test("greedy verdict stream: one verdict per doc; batch(first) " +
@@ -737,49 +738,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("survivor index on a BUCKETED banded table: snapshots match batch " +
-    "dedupCorpus and a replayed epoch neither duplicates nor diverges") {
-    implicit val sql = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val mb = 100000
-    val tbl = "b_banded_streamspec"
-    val docsDF = Tables.documents(spark, sf0001)
-      .where(col("doc_id") < 400).select("doc_id", "text")
-    val docs = docsDF.orderBy("doc_id").as[DocDedup.Doc].collect()
-    val root = java.nio.file.Files.createTempDirectory("survbkt").toString
-    try {
-      val in = MemoryStream[DocDedup.Doc]
-      val q = DocDedup.survivorQuery(in.toDF(), 0.8, s"$root/state",
-        s"$root/out", s"$root/ckpt", maxBucket = mb,
-        bandedTable = Some(tbl))
-      val chunks = docs.grouped((docs.length + 2) / 3).toSeq
-      chunks.foreach { chunk =>
-        in.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      q.stop()
-      def snapshot(epoch: Int): Set[Long] =
-        spark.read.parquet(s"$root/out/epoch=$epoch")
-          .select("doc_id").as[Long].collect().toSet
-      val fin = snapshot(chunks.length - 1)
-      val finBatch = operators.TextPipeline
-        .dedupCorpus(docsDF, 0.8, "minhash-lsh", electBy = "first",
-          maxBucket = mb)
-        .select("doc_id").as[Long].collect().toSet
-      assert(fin == finBatch,
-        s"stream-only: ${(fin -- finBatch).toSeq.sorted}; " +
-          s"batch-only: ${(finBatch -- fin).toSeq.sorted}")
-      // failure-recovery replay of the LAST epoch: the bucketed store
-      // rewrites its epoch partition instead of appending to it
-      val last = (chunks.length - 1).toLong
-      assertReplayIdempotent(root, "words", Some(tbl), "doc_id", last) {
-        DocDedup.ingestEpoch(chunks.last.toSeq.toDF(), 0.8, s"$root/state",
-          s"$root/out", last, mb, Some(tbl))
-      }
-    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
-  }
-
   test("EmbDedup.bandedRows signatures match the batch hyperplaneBanded path") {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, sf0001).where(col("vec_id") < 100)
@@ -833,49 +791,14 @@ class StreamingSpec extends SparkSpec {
       s"final stream-only: ${(fin -- finBatch).toSeq.sorted}; " +
         s"batch-only: ${(finBatch -- fin).toSeq.sorted}")
     val last = (chunks.length - 1).toLong
-    assertReplayIdempotent(root, "vecs", None, "vec_id", last) {
+    assertReplayIdempotent(root, "vecs", "vec_id", last) {
       streaming.EmbDedup.ingestEpoch(chunks.last.toSeq.toDF(), 0.3,
         s"$root/state", s"$root/out", last, mb)
     }
-  }
-
-  test("EmbDedup survivor index on a BUCKETED banded table matches " +
-    "batch dedupEmbeddings(lsh)") {
-    implicit val sql = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val tbl = "b_banded_embspec"
-    val embDF = Tables.embeddings(spark, sf0001)
-      .where(col("vec_id") < 200).select("vec_id", "embedding")
-    val vecs = embDF.withColumn("embedding",
-        org.apache.spark.sql.functions.transform(col("embedding"), _.cast("double")))
-      .orderBy("vec_id").as[streaming.EmbDedup.Vec].collect()
-    val root = java.nio.file.Files.createTempDirectory("embsurvbkt").toString
-    try {
-      val in = MemoryStream[streaming.EmbDedup.Vec]
-      val q = streaming.EmbDedup.survivorQuery(in.toDF(), 0.3, s"$root/state",
-        s"$root/out", s"$root/ckpt", maxBucket = 100000,
-        bandedTable = Some(tbl))
-      val chunks = vecs.grouped((vecs.length + 1) / 2).toSeq
-      chunks.foreach { chunk =>
-        in.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      q.stop()
-      val fin = spark.read.parquet(s"$root/out/epoch=${chunks.length - 1}")
-        .select("vec_id").as[Long].collect().toSet
-      val batch = operators.Similarity
-        .dedupEmbeddings(embDF, 0.3, "lsh", maxBucket = 100000)
-        .select("vec_id").as[Long].collect().toSet
-      assert(fin == batch,
-        s"stream-only: ${(fin -- batch).toSeq.sorted}; " +
-          s"batch-only: ${(batch -- fin).toSeq.sorted}")
-      val last = (chunks.length - 1).toLong
-      assertReplayIdempotent(root, "vecs", Some(tbl), "vec_id", last) {
-        streaming.EmbDedup.ingestEpoch(chunks.last.toSeq.toDF(), 0.3,
-          s"$root/state", s"$root/out", last, 100000, Some(tbl))
-      }
-    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    // an empty epoch N+1 leaves epoch N's survivor snapshot as it was
+    streaming.EmbDedup.ingestEpoch(Seq.empty[streaming.EmbDedup.Vec].toDF(), 0.3,
+      s"$root/state", s"$root/out", last + 1, mb)
+    assert(snapshot(chunks.length) == fin, "an empty epoch changed the snapshot")
   }
 
   test("greedy embedding verdicts: one per vector; batch min-id " +

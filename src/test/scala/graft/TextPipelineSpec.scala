@@ -105,7 +105,7 @@ class TextPipelineSpec extends SparkSpec {
 
   test("connectedComponents loop: the keyed edges checkpoint keeps its " +
     "partitioning under AQE") {
-    import org.apache.spark.sql.catalyst.plans.physical.{CoalescedHashPartitioning, HashPartitioning}
+    import org.apache.spark.sql.catalyst.plans.physical.{CoalescedHashPartitioning, HashPartitioning, UnknownPartitioning}
     import org.apache.spark.sql.execution.LogicalRDD
     import spark.implicits._
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
@@ -124,6 +124,17 @@ class TextPipelineSpec extends SparkSpec {
       case p => fail(s"restore skipped: $p")
     }
     assert(keys.flatMap(_.references.map(_.name)) == Seq("dst"), keys)
+    // the restored node keeps the unpatched checkpoint's size estimate
+    // (origin statistics), never the default size of an unknown relation
+    val unpatched = pairs.select(col("a").as("src"), col("b").as("dst"))
+      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+      .repartition(col("dst"))
+      .localCheckpoint().queryExecution.logical match {
+        case u: LogicalRDD if u.outputPartitioning.isInstanceOf[UnknownPartitioning] => u
+        case other => fail(s"not an unpatched checkpoint scan: $other")
+      }
+    assert(lr.stats.sizeInBytes == unpatched.stats.sizeInBytes)
+    assert(lr.stats.sizeInBytes < BigInt(Long.MaxValue))
   }
 
   test("hammingNeighborPairs (banded) == brute-force all-pairs, any k") {
